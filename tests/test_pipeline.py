@@ -5,6 +5,7 @@ end-to-end F1 >= 0.99 gate on the synthetic labeled corpus."""
 from __future__ import annotations
 
 import itertools
+import json
 
 import pytest
 from pyspark.sql import functions as F
@@ -87,11 +88,8 @@ def test_candidate_pairs_dedup_across_bands(spark):
     assert out.count() == 1
 
 
-def test_connected_components_basic(spark):
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("x", "y"), ("p", "q"), ("q", "r"), ("r", "a")],
-        "id_a string, id_b string",
-    )
+def test_connected_components_basic(cc_graph):
+    edges = cc_graph("basic")
     labels = connected_components(edges)
     got = {r["id"]: r["cluster_id"] for r in labels.collect()}
     # a-b-c-r-q-p is one chain; x-y another
@@ -99,11 +97,8 @@ def test_connected_components_basic(spark):
     assert got["x"] == got["y"] == "x"
 
 
-def test_connected_components_long_chain(spark):
-    n = 64
-    edges = spark.createDataFrame(
-        [(f"n{i:03d}", f"n{i+1:03d}") for i in range(n)], "id_a string, id_b string"
-    )
+def test_connected_components_long_chain(cc_graph):
+    edges = cc_graph("chain64")
     labels = connected_components(edges, max_iter=12)
     got = {r["cluster_id"] for r in labels.collect()}
     assert got == {"n000"}
@@ -116,11 +111,21 @@ def test_connected_components_checkpoint_resume(spark, tmp_path):
     )
     l1 = connected_components(edges, checkpoint_dir=ckpt)
     got1 = {r["id"]: r["cluster_id"] for r in l1.collect()}
+    with open(f"{ckpt}/manifest.json") as f:
+        man1 = json.load(f)
+    iters1 = sorted(p.name for p in (tmp_path / "cc").glob("iter_*"))
+    n_metrics1 = spark.read.parquet(f"{ckpt}/metrics").count()
+    assert man1["iterations"][-1]["converged"]
     # resume: a fresh call with the same checkpoint dir must converge
-    # immediately from the manifest and give identical labels
+    # immediately from the manifest and give identical labels, running
+    # no round: no new iter_* directory, manifest entry or metrics row
     l2 = connected_components(edges, checkpoint_dir=ckpt)
     got2 = {r["id"]: r["cluster_id"] for r in l2.collect()}
     assert got1 == got2
+    with open(f"{ckpt}/manifest.json") as f:
+        assert json.load(f) == man1
+    assert sorted(p.name for p in (tmp_path / "cc").glob("iter_*")) == iters1
+    assert spark.read.parquet(f"{ckpt}/metrics").count() == n_metrics1
     # metrics sink exists with per-iteration rows
     m = spark.read.parquet(f"{ckpt}/metrics")
     assert m.count() >= 1
@@ -155,7 +160,14 @@ def test_end_to_end_f1(spark, tmp_path):
     lin = spark.read.parquet(str(tmp_path / "lineage"))
     stages = {r["stage"] for r in lin.select("stage").distinct().collect()}
     assert stages == {"docs", "candidates", "pairs_scored", "matches", "clusters"}
-    assert res.metrics["lineage_docs"]["n_rows"] == res.metrics["n_docs"]
+    # the observed census totals equal the pipeline's own counts
+    for stage, count in [
+        ("docs", "n_docs"),
+        ("pairs_scored", "n_pairs_scored"),
+        ("matches", "n_matches"),
+        ("clusters", "n_records"),
+    ]:
+        assert res.metrics[f"lineage_{stage}"]["n_rows"] == res.metrics[count], stage
 
     # prune count is a recorded lineage fact: candidates census minus
     # scored survivors, never negative

@@ -98,11 +98,8 @@ def test_pipeline_per_pair_k_matches_global_k(spark):
     assert r_pp.metrics["n_pairs_scored"] <= r_gk.metrics["n_pairs_scored"]
 
 
-def test_cc_checkpoint_interval_invariant(spark):
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(0, 40, 2)] + [(1, 2), (5, 6), (11, 12)],
-        "id_a bigint, id_b bigint",
-    )
+def test_cc_checkpoint_interval_invariant(cc_graph):
+    edges = cc_graph("bigint_ladder")
     lab1 = {(r.id, r.cluster_id)
             for r in connected_components(edges, checkpoint_interval=1).collect()}
     lab3 = {(r.id, r.cluster_id)
@@ -158,15 +155,12 @@ def test_all_pairs_topk_recall(spark):
     assert recall >= 0.9, recall
 
 
-def test_local_cc_equals_distributed(spark):
+def test_local_cc_equals_distributed(cc_graph):
     from triple_accel_spark.operators.clustering import (
         local_connected_components,
     )
 
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("x", "y"), ("p", "q"), ("q", "p"), ("m", "m")],
-        "id_a string, id_b string",
-    )
+    edges = cc_graph("self_loops_and_reverse")
     dist = {(r.id, r.cluster_id) for r in connected_components(edges).collect()}
     loc = {(r.id, r.cluster_id)
            for r in local_connected_components(edges).collect()}

@@ -96,6 +96,37 @@ def test_allpairs_expands_without_union(spark):
             fr.unpersist()
 
 
+def _union_form_allpairs(corpus, k, n_planes, n_tables, seed=42):
+    """The pre-rewrite ``lsh_all_pairs_topk`` body: the same arrow
+    bucketing and candidate join, but both directions as a union of two
+    selects over the scored candidates."""
+    from triple_accel_spark.operators.similarity import (
+        cosine_arrow,
+        multitable_buckets_arrow,
+        topk_per_key,
+    )
+
+    base = corpus.select(F.col("vec_id").alias("rid"), F.col("embedding").alias("vec"))
+    blocked = base.select(
+        "rid", "vec", F.posexplode(
+            multitable_buckets_arrow(base, F.col("vec"), n_planes, n_tables, seed)
+        ).alias("_t", "_b")
+    ).select("rid", "vec", F.xxhash64(F.col("_t"), F.col("_b")).alias("block_key"))
+    pairs = candidate_pairs(
+        blocked, id_col="rid", block_col="block_key", payload_cols=("vec",),
+        max_block_size=1000,
+    )
+    scored = pairs.withColumn("cosine", cosine_arrow("vec_a", "vec_b"))
+    both = scored.select(
+        F.col("id_a").alias("query_id"), F.col("id_b").alias("vec_id"), "cosine"
+    ).union(scored.select(
+        F.col("id_b").alias("query_id"), F.col("id_a").alias("vec_id"), "cosine"
+    ))
+    out = topk_per_key(both, "query_id", k, tiebreak_col="vec_id")
+    out._persisted_frames = getattr(pairs, "_persisted_frames", [])
+    return out
+
+
 def test_allpairs_explode_rows_match_union_form(spark):
     """Equivalence of the rewrite: the exploded both-direction frame
     must contain exactly the rows the union form produced (every
@@ -109,14 +140,22 @@ def test_allpairs_explode_rows_match_union_form(spark):
     )
     out = lsh_all_pairs_topk(corpus, k=50, n_planes=2, n_tables=2,
                              max_block_size=1000)
+    ref = _union_form_allpairs(corpus, k=50, n_planes=2, n_tables=2)
+
+    def rows(df):
+        return {
+            (r["query_id"], r["vec_id"], round(r["cosine"], 9))
+            for r in df.select("query_id", "vec_id", "cosine").collect()
+        }
+
     try:
-        rows = out.select("query_id", "vec_id").collect()
-        got = {(r["query_id"], r["vec_id"]) for r in rows}
+        got = rows(out)
         # with k >= candidate count, top-k keeps every candidate: the
         # result must be direction-symmetric and self-pair-free
         assert got, "expected candidates on a dense 2-plane bucketing"
-        assert all((b, a) in got for (a, b) in got)
-        assert all(a != b for (a, b) in got)
+        assert got == rows(ref)
+        assert all((b, a, c) in got for (a, b, c) in got)
+        assert all(a != b for (a, b, _) in got)
     finally:
-        for fr in getattr(out, "_persisted_frames", []):
+        for fr in [*getattr(out, "_persisted_frames", []), *ref._persisted_frames]:
             fr.unpersist()

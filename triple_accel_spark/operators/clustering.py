@@ -4,16 +4,26 @@ al., "Connected Components in MapReduce and Beyond" — the standard
 shuffle-bounded CC for web-scale graphs; converges in O(log^2 n) rounds
 vs O(diameter) for plain label propagation).
 
-Each round is two aggregation+join passes expressed purely in
-DataFrame ops (no collect_list — hot nodes stay scalable because the
-per-node minimum is an aggregation, not a materialized neighbor list).
+Each round is two window passes expressed purely in DataFrame ops (no
+collect_list — hot nodes stay scalable because the per-node minimum is
+an aggregation, not a materialized neighbor list).
 
-Checkpoint/resume: every iteration writes the current edge set to
-``{checkpoint_dir}/iter_NNNN`` plus a ``manifest.json``; a restarted
-job resumes from the highest committed iteration (north-rule
-requirement: resumable from checkpoint). Parquet round-trips also cut
-lineage so plans don't grow across iterations. Per-iteration metric
-rows (edge counts, checksum, converged flag) append to
+Convergence: the contraction's fixed points are exactly the star
+forests (every node points at its component minimum, and no minimum
+points anywhere). Each checkpoint tests its edge set for that shape in
+the same action that counts and checksums it, so the loop stops at the
+first checkpoint that reaches the fixed point instead of paying a
+second interval to see two equal checkpoints. The test reads the
+per-node neighborhoods the next round starts from, and that round
+reuses them, so only the final checkpoint shuffles for the test alone.
+
+Checkpoint/resume: every checkpointed iteration writes the current edge
+set to ``{checkpoint_dir}/iter_NNNN`` plus a ``manifest.json``; a
+restarted job resumes from the highest committed iteration (north-rule
+requirement: resumable from checkpoint), and one whose last entry is
+converged only relabels it. Parquet round-trips also cut lineage so
+plans don't grow across iterations. Per-iteration metric rows (edge
+counts, checksum, converged flag) append to
 ``{checkpoint_dir}/metrics``.
 """
 
@@ -26,19 +36,19 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _large_star(edges: DataFrame) -> DataFrame:
-    """Connect every strictly-larger neighbor of u to u's neighborhood
-    minimum (including u itself).
+def _neighborhoods(edges: DataFrame) -> DataFrame:
+    """Both directions ``(u, v)`` of every edge, each row carrying its
+    node ``u``'s neighborhood minimum ``m`` and degree ``deg``.
 
     Plan shape (round-6 rewrite): the per-node minimum is a window over
     the SAME partitioning the old groupBy+join pair needed three
     exchanges for (guide §2.4 — operations keyed alike share one
     exchange), and both edge directions come from one explode instead
-    of a union that scanned the edge RDD twice. One shuffle per star
-    pass; output identical. The output is NOT deduplicated here: the
-    following ``_small_star`` dedupes its own output, so a round stays
-    distinct while saving one exchange per round (duplicate (v, m)
-    rows only thicken the next window's input marginally)."""
+    of a union that scanned the edge RDD twice. One shuffle; the degree
+    rides on the same window. This is the first half of ``_large_star``
+    and, on a checkpointed edge set, the input of the convergence test
+    (``_checkpoint_stats``), so a checkpoint pays that shuffle once for
+    both."""
     w = Window.partitionBy("u")
     bid = edges.select(
         F.explode(
@@ -48,10 +58,21 @@ def _large_star(edges: DataFrame) -> DataFrame:
             )
         ).alias("_e")
     ).select(F.col("_e.a").alias("u"), F.col("_e.b").alias("v"))
-    return (
-        bid.withColumn("m", F.least(F.min("v").over(w), F.col("u")))
-        .where(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
+    return bid.select(
+        "u", "v", F.min("v").over(w).alias("m"), F.count(F.lit(1)).over(w).alias("deg")
+    )
+
+
+def _large_star(nbhd: DataFrame) -> DataFrame:
+    """Connect every strictly-larger neighbor of u to u's neighborhood
+    minimum (including u itself), from ``_neighborhoods`` rows.
+
+    The output is NOT deduplicated here: the following ``_small_star``
+    dedupes its own output, so a round stays distinct while saving one
+    exchange per round (duplicate (v, m) rows only thicken the next
+    window's input marginally)."""
+    return nbhd.where(F.col("v") > F.col("u")).select(
+        F.col("v").alias("u"), F.least("m", "u").alias("v")
     )
 
 
@@ -77,14 +98,27 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def _checksum(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
+def _checkpoint_stats(nbhd: DataFrame) -> tuple[int, int, bool]:
+    """``(n_edges, checksum, converged)`` of a checkpointed edge set in
+    one action, from its ``_neighborhoods`` rows: a global aggregate
+    with no exchange of its own.
+
+    Every edge leaving ``_small_star`` has ``u > v``, so the edge set
+    is the rows with ``v < u``, and a node has an out-edge exactly when
+    its neighborhood minimum is below it. The star contraction's fixed
+    points are exactly the star forests: each ``u`` has one edge and no
+    ``v`` is itself a ``u``, i.e. every node with an out-edge has
+    degree 1. That decides convergence exactly, with no second
+    checkpoint to compare."""
+    edge = F.col("v") < F.col("u")
+    row = nbhd.agg(
+        F.count(F.when(edge, 1)).alias("n"),
         # xor-fold is order-insensitive and cannot overflow (edges are
         # distinct after _small_star, so xor cancellation is safe)
-        F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
+        F.coalesce(F.bit_xor(F.when(edge, F.xxhash64("u", "v"))), F.lit(0)).alias("h"),
+        F.count(F.when((F.col("m") < F.col("u")) & (F.col("deg") > 1), 1)).alias("bad"),
     ).collect()[0]
-    return int(row["n"]), int(row["h"])
+    return int(row["n"]), int(row["h"]), row["bad"] == 0
 
 
 def _manifest_path(d: str) -> str:
@@ -122,37 +156,46 @@ def connected_components(
     ``attach_singletons``).
 
     ``checkpoint_interval`` star rounds run between driver ACTIONS
-    (convergence checksum / durable checkpoint): every round is still
+    (convergence test / durable checkpoint): every round is still
     lazily local-checkpointed — a LogicalRDD barrier that keeps the
     logical plan constant-size (each star pass references its input
     4x, so un-truncated lineage grows ~4^rounds and planning time
-    explodes) — but only interval rounds pay a job: the checksum
-    action materializes everything since the last one. The contraction
-    is monotone, so a fixed point reached mid-interval is still
-    detected at the next checkpoint, trading at most ``interval-1``
-    extra cheap rounds for half (at 2) the actions and durable
-    checkpoint writes. Resume granularity is the checkpointed round."""
+    explodes) — but only interval rounds pay a job: the checkpoint
+    action materializes everything since the last one. That one action
+    returns the edge count, the checksum and the convergence test:
+    the loop stops at the first checkpoint whose edge set is a star
+    forest, which is exactly a fixed point of the contraction. The test
+    runs on the checkpoint's ``_neighborhoods``, local-checkpointed
+    so the next round starts from them instead of shuffling again. A fixed
+    point reached mid-interval therefore stops the loop at the end of
+    that interval, trading at most ``interval-1`` extra cheap rounds
+    (no-ops on a star forest) for half (at 2) the actions and durable
+    checkpoint writes. Resume granularity is the checkpointed round; a
+    manifest whose last entry is converged resumes with no round at
+    all, straight to labelling."""
     spark = edges.sparkSession
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
         F.col("u") != F.col("v")
     )
 
     start_iter = 0
-    prev_sig: tuple[int, int] | None = None
+    converged = False
+    manifest = {"iterations": []}
     if checkpoint_dir:
         man = _read_manifest(checkpoint_dir)
         if man and man.get("iterations"):
+            manifest = man
             last = man["iterations"][-1]
             e = spark.read.parquet(last["path"])
             start_iter = last["iteration"] + 1
-            prev_sig = (last["n_edges"], last["checksum"])
-
-    manifest = _read_manifest(checkpoint_dir) if checkpoint_dir else None
-    manifest = manifest or {"iterations": []}
+            converged = last["converged"]
 
     checkpoint_interval = max(1, checkpoint_interval)
+    nbhd = _neighborhoods(e)
     for it in range(start_iter, max_iter):
-        e = _small_star(_large_star(e))
+        if converged:
+            break
+        e = _small_star(_large_star(nbhd))
         at_cp = (
             (it - start_iter + 1) % checkpoint_interval == 0
             or it == max_iter - 1
@@ -166,28 +209,28 @@ def connected_components(
             # the RDD materializes with the next action, so deferred
             # rounds cost no job of their own
             e = e.localCheckpoint(eager=False)
+        nbhd = _neighborhoods(e)
         if not at_cp:
             continue
-        sig = _checksum(e)
-        converged = sig == prev_sig
+        # the test reads the next round's neighborhoods: keep them, so
+        # the round does not shuffle the edge set a second time
+        nbhd = nbhd.localCheckpoint(eager=False)
+        n_edges, checksum, converged = _checkpoint_stats(nbhd)
         if checkpoint_dir:
             manifest["iterations"].append(
                 {
                     "iteration": it,
                     "path": path,
-                    "n_edges": sig[0],
-                    "checksum": sig[1],
+                    "n_edges": n_edges,
+                    "checksum": checksum,
                     "converged": converged,
                 }
             )
             _write_manifest(checkpoint_dir, manifest)
             spark.createDataFrame(
-                [(it, sig[0], sig[1], converged)],
+                [(it, n_edges, checksum, converged)],
                 "iteration int, n_edges long, checksum long, converged boolean",
             ).write.mode("append").parquet(os.path.join(checkpoint_dir, "metrics"))
-        if converged:
-            break
-        prev_sig = sig
 
     # after convergence every edge is (node, component-min)
     labels = e.select(F.col("u").alias("id"), F.col("v").alias("cluster_id"))

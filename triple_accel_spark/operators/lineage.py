@@ -13,6 +13,9 @@ mechanisms:
   write is idempotent per (run_id, stage, ordinal) directory so a
   restarted job overwrites rather than duplicates its own partials
   (same commit discipline as the clustering checkpoint manifest).
+  A commit is one write job per stage: the driver totals it returns
+  are observed on the census rows as the write streams them
+  (``pyspark.sql.Observation``), not read back from the sink.
 
 The connected-components loop commits its own per-iteration rows
 (edge counts, checksum, convergence) — see ``clustering.py``; this
@@ -24,7 +27,7 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -66,7 +69,7 @@ def commit_stage_metrics(
     id_col: str | None = None,
 ) -> dict:
     """Commit a stage's partition census to the metrics sink and return
-    driver-side totals. Layout:
+    the driver-side totals observed on the written rows. Layout:
     ``{metrics_dir}/run_id={run_id}/stage={stage}/ordinal={ordinal}``
     — overwritten on retry, so replays are idempotent."""
     stats = partition_stats(df, stage, size_col=size_col, id_col=id_col)
@@ -76,13 +79,14 @@ def commit_stage_metrics(
     path = os.path.join(
         metrics_dir, f"run_id={run_id}", f"stage={stage}", f"ordinal={ordinal}"
     )
-    stats.write.mode("overwrite").parquet(path)
-    spark = df.sparkSession
-    row = spark.read.parquet(path).agg(
+    totals = Observation()
+    stats.observe(
+        totals,
         F.count(F.lit(1)).alias("n_partitions"),
         F.sum("n_rows").alias("n_rows"),
         F.sum("n_bytes").alias("n_bytes"),
-    ).collect()[0]
+    ).write.mode("overwrite").parquet(path)
+    row = totals.get
     return {
         "stage": stage,
         "n_partitions": row["n_partitions"],

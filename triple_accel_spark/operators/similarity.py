@@ -119,16 +119,17 @@ def _to_matrix(v: pd.Series, dim: int | None = None) -> tuple[np.ndarray, np.nda
     the Arrow views (C-level copy) — the per-row Python assignment loop
     ran per batch element and dominated the cosine stage's profile
     (millions of pair rows per corpus pass, each carrying two vectors);
-    ``vstack`` raises on any NULL or ragged row, which routes exactly
-    the dirty batches to the masked slow path with identical results."""
+    ``vstack`` raises ``ValueError`` on a ragged row or a NULL among
+    vectors, and stacks an all-NULL batch into an object matrix, which
+    routes exactly the dirty batches to the masked slow path with
+    identical results. Any other error propagates."""
     arr = v.to_numpy()
     try:
-        mat = np.vstack(arr).astype(np.float64, copy=False)
-        if dim is not None and mat.shape[1] != dim:
-            raise ValueError("dim mismatch")
-        return mat, np.ones(len(arr), dtype=bool)
-    except Exception:
-        pass
+        mat = np.vstack(arr)
+    except (ValueError, TypeError):
+        mat = None
+    if mat is not None and mat.dtype != object and (dim is None or mat.shape[1] == dim):
+        return mat.astype(np.float64, copy=False), np.ones(len(arr), dtype=bool)
     rows = [None if r is None else np.asarray(r, dtype=np.float64) for r in v]
     if dim is None:
         dim = next((int(r.size) for r in rows if r is not None), 0)
