@@ -61,10 +61,39 @@ def test_candidate_links_exact(spark, salt_threshold, salt_shards):
     assert pairs == want
     assert len(pairs) > 0
 
+    # salting boundary on |L|·|R|: the "at" block (2 x 3) is exactly
+    # salt_threshold = 6 and stays unsalted, the "over" block (1 x 7)
+    # is salted; both give the full cross product
+    lrows = [(1, "at", "x"), (2, "at", "x"), (3, "over", "x")]
+    rrows = [(10 + i, "at", "y") for i in range(3)]
+    rrows += [(20 + i, "over", "y") for i in range(7)]
+    schema = "id long, block_key string, text string"
+    got = candidate_links(
+        spark.createDataFrame(lrows, schema),
+        spark.createDataFrame(rrows, schema), id_col="id",
+        payload_cols=("text",), max_block_pairs=None,
+        salt_threshold=6, salt_shards=salt_shards,
+    )
+    pairs = {(r.id_l, r.id_r) for r in got.collect()}
+    assert pairs == {
+        (a, b) for a, ka, _ in lrows for b, kb, _ in rrows if ka == kb
+    }
+
 
 def test_candidate_links_payloads_and_cap(spark):
-    left = _corpus(spark, 40)
-    right = left.select((F.col("id") + 500).alias("id"), "text")
+    # left/right each get an "at cap" block (5 x 10 = 50 candidates,
+    # kept) and an "over cap" block (3 x 17 = 51, dropped)
+    def edge_blocks(offset, n_at, n_over):
+        return spark.createDataFrame(
+            [(offset + i, "CCCC at cap") for i in range(n_at)]
+            + [(offset + 50 + i, "DDDD over cap") for i in range(n_over)],
+            "id long, text string",
+        )
+
+    left = _corpus(spark, 40).unionByName(edge_blocks(900, 5, 3))
+    right = _corpus(spark, 40).select(
+        (F.col("id") + 500).alias("id"), "text"
+    ).unionByName(edge_blocks(1900, 10, 17))
     bl = with_prefix_blocks(left, "text", prefix_len=4)
     br = with_prefix_blocks(right, "text", prefix_len=4)
     # cap low enough to drop the hot AAAA block (20x20=400 candidates)
@@ -80,6 +109,9 @@ def test_candidate_links_payloads_and_cap(spark):
         assert r.text_l == left_texts[r.id_l]
         assert r.text_r == right_texts[r.id_r]
         assert not r.text_l.startswith("AAAA"), "hot block should be capped out"
+        assert not r.text_l.startswith("DDDD"), "51 > max_block_pairs"
+    at_cap = {(r.id_l, r.id_r) for r in rows if r.text_l.startswith("CCCC")}
+    assert len(at_cap) == 50, "|L|·|R| == max_block_pairs must be kept"
 
 
 def test_link_records_assignment(spark):

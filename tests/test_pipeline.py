@@ -54,11 +54,26 @@ def test_candidate_pairs_exact_no_salt(spark):
     assert got == want
 
 
+def _block_pairs(rows):
+    """Brute force: every unordered pair of ids sharing a block key."""
+    blocks: dict = {}
+    for rid, bk, _ in rows:
+        blocks.setdefault(bk, []).append(rid)
+    return {
+        tuple(sorted(p))
+        for ids in blocks.values() for p in itertools.combinations(ids, 2)
+    }
+
+
 @pytest.mark.parametrize("shards", [2, 3, 8])
 def test_candidate_pairs_salted_equals_unsalted(spark, shards):
-    """Salting a hot block must produce exactly the same pair set."""
+    """Salting a hot block must produce exactly the same pair set. The
+    "at" block has exactly ``salt_threshold`` records (not salted), the
+    "over" block one more (salted); both give the brute-force pairs."""
     rows = [(f"r{i:03d}", "hot", f"t{i}") for i in range(40)]
     rows += [(f"s{i}", "cold", f"u{i}") for i in range(3)]
+    rows += [(f"a{i:02d}", "at", "v") for i in range(10)]
+    rows += [(f"o{i:02d}", "over", "w") for i in range(11)]
     df = spark.createDataFrame(rows, "conv_id string, block_key string, doc string")
     plain = _pairs_set(candidate_pairs(df, salt_threshold=10_000, max_block_size=None))
     salted = _pairs_set(
@@ -66,19 +81,26 @@ def test_candidate_pairs_salted_equals_unsalted(spark, shards):
             df, salt_threshold=10, salt_shards=shards, max_block_size=None
         )
     )
-    assert salted == plain
+    assert salted == plain == _block_pairs(rows)
     # and every pair is canonicalized and unique
     assert all(a < b for a, b in salted)
 
 
 def test_candidate_pairs_block_cap(spark):
+    """Blocks above ``max_block_size`` drop; a block of exactly
+    ``max_block_size`` records is kept, one of ``max_block_size + 1``
+    is dropped."""
     rows = [(f"r{i}", "big", "t") for i in range(50)] + [
         ("a", "ok", "t1"),
         ("b", "ok", "t2"),
     ]
-    df = spark.createDataFrame(rows, "conv_id string, block_key string, doc string")
+    at_cap = [(f"c{i}", "at_cap", "t") for i in range(10)]
+    over_cap = [(f"d{i:02d}", "over_cap", "t") for i in range(11)]
+    df = spark.createDataFrame(
+        rows + at_cap + over_cap, "conv_id string, block_key string, doc string"
+    )
     got = _pairs_set(candidate_pairs(df, max_block_size=10))
-    assert got == {("a", "b")}
+    assert got == {("a", "b")} | _block_pairs(at_cap)
 
 
 def test_candidate_pairs_dedup_across_bands(spark):

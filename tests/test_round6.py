@@ -6,6 +6,7 @@ from __future__ import annotations
 import re
 
 import pyspark.sql.functions as F
+import pytest
 
 from triple_accel_spark.operators.linkage import candidate_links
 from triple_accel_spark.operators.pairs import candidate_pairs
@@ -16,41 +17,19 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_pair_dedupe_exchange_is_pinned(spark):
-    """The cross-band dedupe's exchange must be the user-specified
-    keyed repartition (exempt from AQE byte-based coalescing, which
-    collapsed the 16 B/row ids-only exchange to 1-2 partitions and
-    starved the downstream payload attach + scoring kernel) — and it
-    must REPLACE the distinct's implicit exchange, not stack under it."""
+def _pinned_pairs(spark):
     blocked = spark.range(40).select(
         F.col("id").alias("rid"),
         (F.col("id") % 5).alias("bk"),
         F.concat(F.lit("doc"), F.col("id").cast("string")).alias("doc"),
     )
-    cp = candidate_pairs(
+    return candidate_pairs(
         blocked, id_col="rid", block_col="bk", payload_cols=("doc",),
         max_block_size=100,
     )
-    try:
-        plan = _plan(cp)
-        pinned = re.findall(
-            r"hashpartitioning\(id_a[^)]*id_b[^)]*\), REPARTITION_BY_NUM", plan
-        )
-        implicit = re.findall(
-            r"hashpartitioning\(id_a[^)]*id_b[^)]*\), ENSURE_REQUIREMENTS", plan
-        )
-        assert len(pinned) == 1, f"expected one pinned dedupe exchange:\n{plan}"
-        assert not implicit, (
-            "the keyed repartition must satisfy the distinct's "
-            f"distribution (no second pair exchange):\n{plan}"
-        )
-    finally:
-        for fr in cp._persisted_frames:
-            fr.unpersist()
 
 
-def test_link_dedupe_exchange_is_pinned(spark):
-    """Two-table twin of the pin above (id_l, id_r keys)."""
+def _pinned_links(spark):
     bl = spark.range(20).select(
         F.col("id").alias("id"), (F.col("id") % 4).alias("block_key"),
         F.lit("x").alias("text"),
@@ -59,20 +38,35 @@ def test_link_dedupe_exchange_is_pinned(spark):
         (F.col("id") + 100).alias("id"), (F.col("id") % 4).alias("block_key"),
         F.lit("x").alias("text"),
     )
-    pairs = candidate_links(bl, br, id_col="id", block_col="block_key",
-                            payload_cols=("text",))
+    return candidate_links(bl, br, id_col="id", block_col="block_key",
+                           payload_cols=("text",))
+
+
+@pytest.mark.parametrize("build,a,b", [
+    (_pinned_pairs, "id_a", "id_b"), (_pinned_links, "id_l", "id_r"),
+], ids=["pairs", "links"])
+def test_dedupe_exchange_is_pinned(spark, build, a, b):
+    """The cross-band dedupe's exchange must be the user-specified
+    keyed repartition (exempt from AQE byte-based coalescing, which
+    collapsed the 16 B/row ids-only exchange to 1-2 partitions and
+    starved the downstream payload attach + scoring kernel) — and it
+    must REPLACE the distinct's implicit exchange, not stack under it."""
+    cp = build(spark)
     try:
-        plan = _plan(pairs)
+        plan = _plan(cp)
         pinned = re.findall(
-            r"hashpartitioning\(id_l[^)]*id_r[^)]*\), REPARTITION_BY_NUM", plan
+            rf"hashpartitioning\({a}[^)]*{b}[^)]*\), REPARTITION_BY_NUM", plan
         )
         implicit = re.findall(
-            r"hashpartitioning\(id_l[^)]*id_r[^)]*\), ENSURE_REQUIREMENTS", plan
+            rf"hashpartitioning\({a}[^)]*{b}[^)]*\), ENSURE_REQUIREMENTS", plan
         )
-        assert len(pinned) == 1
-        assert not implicit
+        assert len(pinned) == 1, f"expected one pinned dedupe exchange:\n{plan}"
+        assert not implicit, (
+            "the keyed repartition must satisfy the distinct's "
+            f"distribution (no second pair exchange):\n{plan}"
+        )
     finally:
-        for fr in pairs._persisted_frames:
+        for fr in cp._persisted_frames:
             fr.unpersist()
 
 

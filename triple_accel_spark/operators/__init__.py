@@ -2,7 +2,8 @@
 
 ``assemble``    turns -> per-conversation documents (stable ordering).
 ``blocking``    q-gram / MinHash-band / prefix blocking keys.
-``pairs``       salted candidate-pair self-join with hot-block handling.
+``pairs``       the one salted candidate-generation core: self-join
+                pairs and two-table links (re-exported by ``linkage``).
 ``scoring``     k-cutoff prefilter + vectorized pair scoring.
 ``clustering``  connected components (large-star/small-star) with
                 checkpoint/resume and per-iteration metrics.

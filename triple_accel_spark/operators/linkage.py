@@ -9,23 +9,10 @@ parity: the scoring kernels are the same triple_accel edit-distance
 family (levenshtein.rs / hamming.rs); the two-table plumbing is the
 graft axis.
 
-Scale design mirrors ``operators.pairs.candidate_pairs``:
-
-* the block join carries ONLY ``(block, shard, id)`` rows — payloads are
-  re-attached per side after the cross-band dedupe, so the widest
-  payload shuffle is linear in each table's record count, never the
-  candidate-pair count;
-* hot blocks (candidate volume ``|L_b| * |R_b|`` above
-  ``salt_threshold``) are split by deterministically sharding the RIGHT
-  side on ``xxhash64(id) % s`` and replicating LEFT rows across the
-  ``s`` shards — one hot key becomes ``s`` balanced keys and every
-  (left, right) pair still appears exactly once per block. (A two-table
-  join only needs one salted side — unlike the self-join's shard
-  triangle — because there is no canonicalization collapsing mirrored
-  pairs.)
-* blocks whose candidate volume exceeds ``max_block_pairs`` are dropped
-  entirely (an uninformative key; standard ER practice), surfaced in
-  the metrics.
+Candidate generation is ``candidate_links``, re-exported from
+``operators.pairs``: the same salted block join, cross-band dedupe and
+payload re-attach core as the self-join, with blocks measured by their
+pair volume ``|L_b|·|R_b|`` and an optional early length prune.
 """
 
 from __future__ import annotations
@@ -40,196 +27,8 @@ from triple_accel_spark.operators.blocking import (
     with_minhash_blocks,
     with_prefix_blocks,
 )
+from triple_accel_spark.operators.pairs import candidate_links
 from triple_accel_spark.operators.scoring import relative_k_col, score_pairs
-
-
-def candidate_links(
-    blocked_left: DataFrame,
-    blocked_right: DataFrame,
-    id_col: str = "id",
-    block_col: str = "block_key",
-    payload_cols: tuple[str, ...] = ("text",),
-    max_block_pairs: int | None = 1_000_000,
-    salt_threshold: int = 4096,
-    salt_shards: int = 8,
-    dedupe: bool = True,
-    prune_threshold: float | None = None,
-    prune_text_col: str | None = None,
-    prune_costs: EditCosts = LEVENSHTEIN_COSTS,
-    payload_left: DataFrame | None = None,
-    payload_right: DataFrame | None = None,
-) -> DataFrame:
-    """Join left x right records sharing a block key into candidate
-    links: one row per (left, right) pair — ``id_l, id_r,
-    <payload>_l..., <payload>_r...``.
-
-    Both inputs carry ``id_col``, ``block_col`` and the payload columns
-    (payloads functionally dependent on the id — attributes repeated
-    per band). Ids need not be disjoint across tables: the pair keeps
-    table roles, no cross-table canonicalization.
-
-    Early length prune (``prune_threshold`` + ``prune_text_col``): a
-    pair can only reach similarity ``t`` on column ``c`` if
-    ``gap_cost * |len_l - len_r| + start_gap <= (1-t) *
-    greatest(len_l, len_r)`` — exactly the bound
-    ``scoring.score_pairs`` applies via ``length_prefilter`` +
-    ``relative_k_col``, so pruning here changes nothing downstream
-    when the caller scores with a per-pair relative k. Applying it on
-    fixed-width length ints BEFORE the cross-band dedupe and the
-    payload re-attach keeps length-incompatible pairs (the bulk of LSH
-    false candidates on a mixed-length corpus) out of the distinct
-    shuffle and the payload joins entirely.
-
-    Persist lifecycle: the per-side projections (feeding the size
-    census, the join, and — without ``payload_left``/``payload_right``
-    — the payload re-attach) are persisted and exposed as
-    ``result._persisted_frames`` for callers that materialize the pairs
-    to release.
-
-    ``payload_left``/``payload_right`` (round-6): one-row-per-id frames
-    carrying ``(id_col, payload_cols...)`` — normally the caller's raw
-    input tables. When given, payloads re-attach from them directly and
-    the per-side ``groupBy(rid).first(...)`` dedup aggregations (one
-    full pass over each band table) are skipped; results are identical
-    because the blocked payloads are the same attributes repeated per
-    band.
-    """
-    prune = prune_threshold is not None and prune_text_col is not None
-    ext_payloads = payload_left is not None and payload_right is not None
-    sides = []
-    persisted = []
-    for side, blocked in (("l", blocked_left), ("r", blocked_right)):
-        cols = [
-            F.col(id_col).alias("rid"),
-            F.col(block_col).alias("bk"),
-            *([] if ext_payloads else [F.col(c) for c in payload_cols]),
-        ]
-        if prune:
-            cols.append(F.length(prune_text_col).alias("_len"))
-        base = blocked.select(*cols).persist()
-        # eager: the volume census and both join roles fan out into
-        # concurrent cold-cache branches otherwise (see
-        # pairs.candidate_pairs)
-        base.count()
-        persisted.append(base)
-        sides.append(base)
-    left, right = sides
-
-    # per-block candidate volume |L_b| * |R_b| from ONE aggregation
-    # over the tagged union of both sides (round-6: the former
-    # per-side aggs + inner join cost two extra shuffles/barriers for
-    # the same numbers; blocks missing on a side have a zero count and
-    # are dropped by the > 0 filter exactly as the inner join dropped
-    # them)
-    tagged = left.select("bk", F.lit(1).alias("_l")).unionByName(
-        right.select("bk", F.lit(0).alias("_l"))
-    )
-    vol = (
-        tagged.groupBy("bk")
-        .agg(
-            F.sum("_l").alias("lsz"),
-            F.sum(F.lit(1) - F.col("_l")).alias("rsz"),
-        )
-        .where((F.col("lsz") > 0) & (F.col("rsz") > 0))
-        .select("bk", (F.col("lsz") * F.col("rsz")).alias("vol"))
-    )
-    if max_block_pairs is not None:
-        vol = vol.where(F.col("vol") <= max_block_pairs)
-
-    hot = F.col("vol") > salt_threshold
-    lens = ["_len"] if prune else []
-    # right role: each record lands in its own shard (hot) or shard 0
-    r = (
-        right.select("rid", "bk", *lens)
-        .join(vol, "bk")
-        .select(
-            "bk",
-            F.when(hot, F.pmod(F.xxhash64(F.col("rid")), F.lit(salt_shards)))
-            .otherwise(F.lit(0))
-            .alias("shard"),
-            F.col("rid").alias("rid_r"),
-            *[F.col(c).alias(f"{c}_r") for c in lens],
-        )
-    )
-    # left role: replicate across all live shards of the block
-    l = (
-        left.select("rid", "bk", *lens)
-        .join(vol, "bk")
-        .select(
-            "bk",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.when(hot, F.lit(salt_shards - 1)).otherwise(F.lit(0)),
-                )
-            ).alias("shard"),
-            F.col("rid").alias("rid_l"),
-            *[F.col(c).alias(f"{c}_l") for c in lens],
-        )
-    )
-    joined = l.join(r, ["bk", "shard"])
-    if prune:
-        # same bound as scoring's length_prefilter(relative_k_col(t)),
-        # on the precomputed ints: prune BEFORE dedupe + payload joins
-        k_pair = F.ceil(
-            F.lit(1.0 - prune_threshold)
-            * F.greatest(F.col("_len_l"), F.col("_len_r"), F.lit(1)).cast(
-                "double"
-            )
-        ).cast("int")
-        unit_k = F.floor(
-            F.greatest(k_pair - F.lit(prune_costs.start_gap_cost), F.lit(0))
-            / F.lit(prune_costs.gap_cost)
-        )
-        joined = joined.where(
-            F.abs(F.col("_len_l") - F.col("_len_r")) <= unit_k
-        )
-    pairs = joined.select(
-        F.col("rid_l").alias("id_l"), F.col("rid_r").alias("id_r")
-    )
-    if dedupe:
-        # a pair found by several bands must be scored once.
-        # round-6: keyed repartition pins the dedupe exchange's
-        # parallelism (same rationale and measurement as
-        # pairs.candidate_pairs — AQE coalesced the 16 B/row ids-only
-        # exchange to 1-2 partitions and the downstream payload attach
-        # + scoring kernel inherited the starvation).
-        n_out = pairs.sparkSession.sparkContext.defaultParallelism
-        pairs = pairs.repartition(n_out, "id_l", "id_r").dropDuplicates()
-
-    if payload_cols:
-        if ext_payloads:
-            pl = payload_left.select(
-                F.col(id_col).alias("id_l"),
-                *[F.col(c).alias(f"{c}_l") for c in payload_cols],
-            )
-            pr = payload_right.select(
-                F.col(id_col).alias("id_r"),
-                *[F.col(c).alias(f"{c}_r") for c in payload_cols],
-            )
-        else:
-            pl = left.groupBy("rid").agg(
-                *[F.first(c).alias(c) for c in payload_cols]
-            ).select(
-                F.col("rid").alias("id_l"),
-                *[F.col(c).alias(f"{c}_l") for c in payload_cols],
-            )
-            pr = right.groupBy("rid").agg(
-                *[F.first(c).alias(c) for c in payload_cols]
-            ).select(
-                F.col("rid").alias("id_r"),
-                *[F.col(c).alias(f"{c}_r") for c in payload_cols],
-            )
-        pairs = (
-            pairs.join(pl, "id_l")
-            .join(pr, "id_r")
-            .select(
-                "id_l", "id_r",
-                *[f"{c}_{s}" for c in payload_cols for s in ("l", "r")],
-            )
-        )
-    pairs._persisted_frames = persisted
-    return pairs
 
 
 @dataclass

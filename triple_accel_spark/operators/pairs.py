@@ -1,31 +1,166 @@
-"""Candidate-pair self-join with explicit skew handling.
+"""Candidate generation: the salted block join behind both the
+self-join (``candidate_pairs``) and the two-table join
+(``candidate_links``).
 
-The quadratic danger in blocking-based ER is the hot block: a block of
-``n`` records yields ``n(n-1)/2`` pairs, all landing on ONE shuffle
-key. At 10^12-turn scale a single viral block would pin one reducer for
-hours. Two explicit mechanisms (on top of Spark AQE skew-join
-splitting, which cannot split a self-join key that explodes
-quadratically):
+Both shapes run one core, ``_block_join``: the join of a left and a
+right base on the block key, carrying ids only, then a pinned cross-band
+dedupe, then the payload re-attach. A self-join is the two-table join of
+one persisted base with itself plus the condition ``rid_l < rid_r``, so
+each unordered pair comes out exactly once and already canonical
+(``id_a < id_b``).
 
-* **salted sharding** — records in blocks above ``salt_threshold`` are
-  deterministically sharded by ``xxhash64(id) % s``; the self-join key
-  becomes ``(block, shard_i, shard_j)`` with each record replicated
-  into its row/column of the shard triangle, splitting one hot key into
-  ``s(s+1)/2`` balanced keys while producing every pair exactly once.
-* **block cap** — blocks above ``max_block_size`` are dropped entirely
-  (an over-populated key is an uninformative blocking key; standard ER
-  practice). Dropped-block counts surface in the metrics sink.
+* **block census** — each block gets one measure: its record count
+  ``n`` for a self-join (live at ``n >= 2``, capped by
+  ``max_block_size``), its pair volume ``|L|·|R|`` for a link (live
+  when both sides are non-empty, capped by ``max_block_pairs``). Blocks
+  over the cap are dropped entirely (an over-populated key is an
+  uninformative blocking key; standard ER practice).
+* **salted sharding** — a block whose measure exceeds
+  ``salt_threshold`` is split: the right side is sharded by
+  ``xxhash64(id) % s`` and the left side replicated across the block's
+  ``s`` shards, so one hot key becomes ``s`` balanced keys and every
+  (left, right) pair still meets exactly once (the skew rule of
+  *Scalable Metric Similarity Join Using MapReduce*, ICDE 2019). Spark
+  AQE's skew-join splitting cannot do this for a key whose output is
+  quadratic in its input.
 
-Output pairs are canonicalized ``id_a < id_b`` and de-duplicated across
-bands with one id-only ``distinct``; payload columns are re-attached
-afterwards so no document/vector bytes ever cross the quadratic part
-of the plan.
+Hot-block trade in a self-join: the one-sided salt writes the same
+shuffle rows as a shard triangle would (about ``(s+1)·n``, ``9n`` at
+``s = 8``), evaluates about 1.8x more join-condition comparisons (half
+of each key's ordered pairs fail ``rid_l < rid_r``), and each of its
+``s`` keys emits about ``n²/2s`` pairs where a triangle key emits about
+``n²/s²``.
+
+No document/vector bytes cross the quadratic part of the plan: payload
+columns are re-attached per side after the dedupe, so the widest
+payload-bearing shuffle is linear in the record count, not the pair
+count. Payload columns must be functionally dependent on the id (record
+attributes repeated per band), which every caller satisfies.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from triple_accel_spark.kernels.costs import EditCosts, LEVENSHTEIN_COSTS
+
+
+def _persisted_base(
+    blocked: DataFrame, id_col: str, block_col: str, cols: list
+) -> DataFrame:
+    """Persist ``(rid, bk, *cols)`` of a blocked frame and pin it warm.
+
+    One projection feeds every consumer (census, both join roles,
+    payload frame), so the upstream blocking lineage is evaluated once.
+    The cache is in-memory columnar: id/key-only reads prune the payload
+    columns at the cache scan. The pin is eager because the consumers
+    fan out into concurrent AQE stages, and Spark's block cache does not
+    serialize concurrent cold computes (profiled runs evaluated the
+    whole blocking lineage 2-4x in racing branches); the one pass is
+    work every consumer needs anyway."""
+    base = blocked.select(
+        F.col(id_col).alias("rid"), F.col(block_col).alias("bk"), *cols
+    ).persist()
+    base.count()
+    return base
+
+
+def _per_record(base: DataFrame, payload_cols: tuple[str, ...]) -> DataFrame:
+    """One ``(rid, payload...)`` row per id, from a map-side-combinable
+    ``first`` aggregation over the band rows."""
+    return base.groupBy("rid").agg(*[F.first(c).alias(c) for c in payload_cols])
+
+
+def _block_join(
+    left: DataFrame,
+    right: DataFrame,
+    census: DataFrame,
+    sides: tuple[str, str],
+    salt_threshold: int,
+    salt_shards: int,
+    payloads: tuple[DataFrame, DataFrame] | None,
+    payload_cols: tuple[str, ...],
+    ordered: bool = False,
+    prune: tuple[float, EditCosts] | None = None,
+) -> DataFrame:
+    """Salted join of two ``(rid, bk[, _len])`` bases on the live blocks
+    of ``census`` (``bk, vol``), deduped across bands, with payloads
+    re-attached: ``id_<l>, id_<r>, <payload>_<l>..., <payload>_<r>...``
+    for ``sides = (l, r)``.
+
+    ``ordered`` keeps only ``rid_l < rid_r`` (the self-join). ``prune =
+    (t, costs)`` keeps only pairs whose ``_len`` gap fits the per-pair
+    budget of ``scoring.length_prefilter(relative_k_col(t))``."""
+    id_l, id_r = (f"id_{s}" for s in sides)
+    lens = ["_len"] if prune else []
+    hot = F.col("vol") > salt_threshold
+    # right role: each record lands in its own shard (hot) or shard 0
+    r = right.select("rid", "bk", *lens).join(census, "bk").select(
+        "bk",
+        F.when(hot, F.pmod(F.xxhash64(F.col("rid")), F.lit(salt_shards)))
+        .otherwise(F.lit(0))
+        .alias("shard"),
+        F.col("rid").alias("rid_r"),
+        *[F.col(c).alias(f"{c}_r") for c in lens],
+    )
+    # left role: replicated across all live shards of the block
+    l = left.select("rid", "bk", *lens).join(census, "bk").select(
+        "bk",
+        F.explode(
+            F.sequence(
+                F.lit(0), F.when(hot, F.lit(salt_shards - 1)).otherwise(F.lit(0))
+            )
+        ).alias("shard"),
+        F.col("rid").alias("rid_l"),
+        *[F.col(c).alias(f"{c}_l") for c in lens],
+    )
+    joined = l.join(r, ["bk", "shard"])
+    if ordered:
+        joined = joined.where(F.col("rid_l") < F.col("rid_r"))
+    if prune:
+        # scoring's length_prefilter(relative_k_col(t)) on the
+        # precomputed ints: prune BEFORE the dedupe and payload joins
+        threshold, costs = prune
+        k_pair = F.ceil(
+            F.lit(1.0 - threshold)
+            * F.greatest(F.col("_len_l"), F.col("_len_r"), F.lit(1)).cast("double")
+        ).cast("int")
+        unit_k = F.floor(
+            F.greatest(k_pair - F.lit(costs.start_gap_cost), F.lit(0))
+            / F.lit(costs.gap_cost)
+        )
+        joined = joined.where(F.abs(F.col("_len_l") - F.col("_len_r")) <= unit_k)
+    pairs = joined.select(F.col("rid_l").alias(id_l), F.col("rid_r").alias(id_r))
+
+    # A pair found by several bands must be scored once. The keyed
+    # repartition pins the dedupe exchange at defaultParallelism: the
+    # ids-only rows are tiny (16 B/pair), so AQE's byte-based coalescing
+    # collapsed this exchange to 1-2 partitions, and the payload
+    # re-attach and the caller's kernel UDF inherited that near-serial
+    # partitioning (link_records scoring on 1.58M pairs: 17.9-21.9 s
+    # starved, 9.3-16.0 s pinned). The repartition satisfies the
+    # dedupe's distribution, so it replaces the implicit exchange. It
+    # also moves the whole aggregate above it: map-side partial dedup is
+    # given up and cross-band duplicates (up to one per band) cross the
+    # network. That trade was measured as a net win at ~1.6M pairs; a
+    # corpus with much heavier band duplication may need it re-measured.
+    n_out = pairs.sparkSession.sparkContext.defaultParallelism
+    pairs = pairs.repartition(n_out, id_l, id_r).dropDuplicates()
+
+    if payloads is not None:
+        for s, p in zip(sides, payloads):
+            pairs = pairs.join(
+                p.select(
+                    F.col("rid").alias(f"id_{s}"),
+                    *[F.col(c).alias(f"{c}_{s}") for c in payload_cols],
+                ),
+                f"id_{s}",
+            )
+        pairs = pairs.select(
+            id_l, id_r, *[f"{c}_{s}" for c in payload_cols for s in sides]
+        )
+    return pairs
 
 
 def candidate_pairs(
@@ -36,147 +171,132 @@ def candidate_pairs(
     max_block_size: int | None = 2000,
     salt_threshold: int = 64,
     salt_shards: int = 8,
-    dedupe: bool = True,
 ) -> DataFrame:
     """Self-join records sharing a block key into scored-pair candidates.
 
     Returns one row per unordered pair: ``id_a, id_b, <payload>_a,
-    <payload>_b`` with ``id_a < id_b``.
+    <payload>_b`` with ``id_a < id_b``. A block is live at 2 or more
+    records and dropped above ``max_block_size``; it is salted above
+    ``salt_threshold`` records.
 
-    Shuffle width: the self-join and the cross-band dedupe carry ONLY
-    ``(block, shard, id)`` / ``(id_a, id_b)`` rows — payloads (full
-    documents, embeddings) never ride the quadratic part of the plan.
-    They are re-attached afterwards by two equi-joins against a
-    per-record frame (one row per id, built with a map-side-combinable
-    ``first`` aggregation), so the widest payload-bearing shuffle is
-    linear in the record count, not the pair count. Payload columns
-    must be functionally dependent on the id (record attributes
-    repeated per band), which every caller satisfies.
-
-    Persist lifecycle: the projected input (and the per-record payload
-    frame, consumed by both attach joins) is persisted. The handles are
+    Persist lifecycle: the projected input and the per-record payload
+    frame (consumed by both attach joins) are persisted. The handles are
     exposed as ``result._persisted_frames`` so callers that materialize
     the pairs (e.g. ``pipeline.resolve_entities``) can unpersist them;
     long-lived drivers calling this repeatedly should do so.
     """
-    # ONE persisted projection feeds every consumer (size census + both
-    # join roles + the payload frame), so the upstream blocking lineage
-    # is evaluated exactly once. The cache is in-memory COLUMNAR, so
-    # the id/key-only reads below prune the payload columns at the
-    # cache scan — payload bytes still never enter the quadratic
-    # self-join's shuffles.
-    base = blocked.select(
-        F.col(id_col).alias("rid"),
-        F.col(block_col).alias("bk"),
-        *[F.col(c) for c in payload_cols],
-    ).persist()
-    # round-6: materialize the cache EAGERLY. The consumers below fan
-    # out into concurrent AQE stages, and Spark's block-level cache does
-    # not serialize concurrent cold computes — profiled runs showed the
-    # whole blocking lineage evaluated 2-4x in racing branches ("Block
-    # rdd_X already exists" churn). One cheap count pins the cache warm
-    # before the fan-out; the pass itself is work every consumer needed
-    # anyway.
-    base.count()
+    base = _persisted_base(blocked, id_col, block_col, list(payload_cols))
     persisted = [base]
-    recs = base.select("rid", "bk")
     payloads = None
     if payload_cols:
-        payloads = (
-            base.groupBy("rid")
-            .agg(*[F.first(c).alias(c) for c in payload_cols])
-            .persist()
-        )
-        persisted.append(payloads)
-
-    # block sizes: one aggregation, joined back (AQE handles the join)
-    sizes = recs.groupBy("bk").agg(F.count(F.lit(1)).alias("bsz"))
-    recs = recs.join(sizes, "bk")
+        per_record = _per_record(base, payload_cols).persist()
+        persisted.append(per_record)
+        payloads = (per_record, per_record)
+    census = base.groupBy("bk").agg(F.count(F.lit(1)).alias("vol"))
     if max_block_size is not None:
-        recs = recs.where(F.col("bsz") <= max_block_size)
-    # singleton blocks can't produce pairs — prune before the explode
-    recs = recs.where(F.col("bsz") >= 2)
-
-    # shard assignment: 1 for cold blocks, hash-mod for hot ones
-    hot = F.col("bsz") > salt_threshold
-    shard = F.when(
-        hot, F.pmod(F.xxhash64(F.col("rid")), F.lit(salt_shards))
-    ).otherwise(F.lit(0))
-    recs = recs.withColumn("shard", shard).withColumn(
-        "nsh", F.when(hot, F.lit(salt_shards)).otherwise(F.lit(1))
+        census = census.where(F.col("vol") <= max_block_size)
+    census = census.where(F.col("vol") >= 2)
+    pairs = _block_join(
+        base, base, census, ("a", "b"), salt_threshold, salt_shards,
+        payloads, payload_cols, ordered=True,
     )
-
-    # left role: record in shard s joins shard pairs (s, j) for j >= s
-    left = recs.withColumn(
-        "other", F.explode(F.sequence(F.col("shard"), F.col("nsh") - 1))
-    ).select(
-        F.col("bk"),
-        F.col("shard").alias("si"),
-        F.col("other").alias("sj"),
-        F.col("rid").alias("rid_l"),
-    )
-    # right role: record in shard s joins shard pairs (i, s) for i <= s
-    right = recs.withColumn(
-        "other", F.explode(F.sequence(F.lit(0), F.col("shard")))
-    ).select(
-        F.col("bk"),
-        F.col("other").alias("si"),
-        F.col("shard").alias("sj"),
-        F.col("rid").alias("rid_r"),
-    )
-
-    joined = left.join(right, ["bk", "si", "sj"])
-    same_shard = F.col("si") == F.col("sj")
-    joined = joined.where(
-        # same shard: strict ordering avoids self-pairs and double emits;
-        # cross shard: every pair appears exactly once (l in si, r in sj)
-        (same_shard & (F.col("rid_l") < F.col("rid_r")))
-        | (~same_shard & (F.col("rid_l") != F.col("rid_r")))
-    )
-
-    # canonicalize id_a < id_b (cross-shard pairs may arrive either way)
-    flip = F.col("rid_l") > F.col("rid_r")
-    pairs = joined.select(
-        F.when(flip, F.col("rid_r")).otherwise(F.col("rid_l")).alias("id_a"),
-        F.when(flip, F.col("rid_l")).otherwise(F.col("rid_r")).alias("id_b"),
-    )
-
-    if dedupe:
-        # a pair found by several bands must be scored once — the
-        # distinct shuffles (id_a, id_b) rows only.
-        # round-6: pin the dedupe exchange's parallelism with a keyed
-        # repartition. The ids-only rows are tiny (16 B/pair), so AQE's
-        # byte-based coalescing collapsed this exchange to 1-2
-        # partitions — and the payload re-attach (broadcast joins) plus
-        # the caller's kernel UDF inherit that near-serial partitioning
-        # (measured: link_records scoring 17.9-21.9s starved vs
-        # 9.3-16.0s pinned on 1.58M pairs; defaultParallelism beat 2x
-        # and unpinned across the q4b/q8 shapes in alternating A/Bs and
-        # is neutral on the small q2 shape). The keyed repartition
-        # satisfies the distinct's distribution requirement, so it
-        # REPLACES the implicit exchange rather than adding one; the
-        # count is cluster-proportional, not a local constant.
-        n_out = blocked.sparkSession.sparkContext.defaultParallelism
-        pairs = pairs.repartition(n_out, "id_a", "id_b").dropDuplicates()
-
-    if payloads is not None:
-        pa = payloads.select(
-            F.col("rid").alias("id_a"),
-            *[F.col(c).alias(f"{c}_a") for c in payload_cols],
-        )
-        pb = payloads.select(
-            F.col("rid").alias("id_b"),
-            *[F.col(c).alias(f"{c}_b") for c in payload_cols],
-        )
-        pairs = (
-            pairs.join(pa, "id_a")
-            .join(pb, "id_b")
-            .select(
-                "id_a", "id_b",
-                *[f"{c}_{s}" for c in payload_cols for s in ("a", "b")],
-            )
-        )
     pairs._persisted_frames = persisted
+    return pairs
+
+
+def candidate_links(
+    blocked_left: DataFrame,
+    blocked_right: DataFrame,
+    id_col: str = "id",
+    block_col: str = "block_key",
+    payload_cols: tuple[str, ...] = ("text",),
+    max_block_pairs: int | None = 1_000_000,
+    salt_threshold: int = 4096,
+    salt_shards: int = 8,
+    prune_threshold: float | None = None,
+    prune_text_col: str | None = None,
+    prune_costs: EditCosts = LEVENSHTEIN_COSTS,
+    payload_left: DataFrame | None = None,
+    payload_right: DataFrame | None = None,
+) -> DataFrame:
+    """Join left x right records sharing a block key into candidate
+    links: one row per (left, right) pair — ``id_l, id_r,
+    <payload>_l..., <payload>_r...``.
+
+    Both inputs carry ``id_col``, ``block_col`` and the payload columns
+    (payloads functionally dependent on the id — attributes repeated
+    per band). Ids need not be disjoint across tables: the pair keeps
+    table roles, no cross-table canonicalization, so the same frame on
+    both sides yields every ordered pair including ``(x, x)``. A block
+    is live when both sides are non-empty and dropped above
+    ``max_block_pairs`` = ``|L_b|·|R_b|``; it is salted above
+    ``salt_threshold`` of the same volume.
+
+    Early length prune (``prune_threshold`` + ``prune_text_col``): a
+    pair can only reach similarity ``t`` on column ``c`` if
+    ``gap_cost * |len_l - len_r| + start_gap <= (1-t) *
+    greatest(len_l, len_r)`` — exactly the bound
+    ``scoring.score_pairs`` applies via ``length_prefilter`` +
+    ``relative_k_col``, so pruning here changes nothing downstream
+    when the caller scores with a per-pair relative k. Applying it on
+    fixed-width length ints BEFORE the cross-band dedupe and the
+    payload re-attach keeps length-incompatible pairs (the bulk of LSH
+    false candidates on a mixed-length corpus) out of the distinct
+    shuffle and the payload joins entirely.
+
+    Persist lifecycle: the per-side projections (feeding the volume
+    census, the join, and — without ``payload_left``/``payload_right``
+    — the payload re-attach) are persisted and exposed as
+    ``result._persisted_frames`` for callers that materialize the pairs
+    to release.
+
+    ``payload_left``/``payload_right``: one-row-per-id frames carrying
+    ``(id_col, payload_cols...)`` — normally the caller's raw input
+    tables. When given, payloads re-attach from them directly and the
+    per-side ``groupBy(rid).first(...)`` aggregations (one full pass
+    over each band table) are skipped; results are identical because
+    the blocked payloads are the same attributes repeated per band.
+    """
+    prune = prune_threshold is not None and prune_text_col is not None
+    ext_payloads = payload_left is not None and payload_right is not None
+    cols = [
+        *([] if ext_payloads else payload_cols),
+        *([F.length(prune_text_col).alias("_len")] if prune else []),
+    ]
+    left = _persisted_base(blocked_left, id_col, block_col, cols)
+    right = _persisted_base(blocked_right, id_col, block_col, cols)
+
+    # |L_b| * |R_b| from ONE aggregation over the tagged union of both
+    # sides; a block missing on a side has a zero count
+    tagged = left.select("bk", F.lit(1).alias("_l")).unionByName(
+        right.select("bk", F.lit(0).alias("_l"))
+    )
+    census = (
+        tagged.groupBy("bk")
+        .agg(
+            F.sum("_l").alias("lsz"),
+            F.sum(F.lit(1) - F.col("_l")).alias("rsz"),
+        )
+        .where((F.col("lsz") > 0) & (F.col("rsz") > 0))
+        .select("bk", (F.col("lsz") * F.col("rsz")).alias("vol"))
+    )
+    if max_block_pairs is not None:
+        census = census.where(F.col("vol") <= max_block_pairs)
+
+    payloads = None
+    if payload_cols and ext_payloads:
+        payloads = tuple(
+            p.select(F.col(id_col).alias("rid"), *payload_cols)
+            for p in (payload_left, payload_right)
+        )
+    elif payload_cols:
+        payloads = (_per_record(left, payload_cols), _per_record(right, payload_cols))
+    pairs = _block_join(
+        left, right, census, ("l", "r"), salt_threshold, salt_shards,
+        payloads, payload_cols,
+        prune=(prune_threshold, prune_costs) if prune else None,
+    )
+    pairs._persisted_frames = [left, right]
     return pairs
 
 
