@@ -11,10 +11,11 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from triple_accel_spark.operators import dedup
+from triple_accel_spark.operators.corpus import CleanseConfig
 from triple_accel_spark.operators.linkage import LinkConfig, candidate_links
 from triple_accel_spark.operators.pairs import candidate_pairs
 from triple_accel_spark.operators.scoring import relative_k_col, score_pairs
-from triple_accel_spark.pipeline import ResolveConfig
 
 SCHEMA = "id string, block_key string, text string"
 
@@ -115,15 +116,36 @@ def test_link_length_prune_is_sound_at_its_boundary(spark, char):
             fr.unpersist()
 
 
-def test_benchmark_call_sites(spark):
-    """``perfbench/layers.py`` calls both entry points with exactly these
-    keyword arguments and releases ``_persisted_frames`` afterwards; the
-    benchmark is not part of this suite, so this guards its call sites."""
+def test_benchmark_call_sites(spark, tmp_path):
+    """``perfbench/layers.py`` builds its configs as
+    ``perfbench/workloads.py`` does, reads the attributes below, calls
+    both entry points with exactly these keyword arguments, releases
+    ``_persisted_frames`` afterwards and mirrors dedup's local-CC
+    threshold; the benchmark is not part of this suite, so this guards
+    its call sites."""
+    from perfbench.layers import DEDUP_CC_LOCAL_THRESHOLD
+    from perfbench.workloads import CLEANSE_CFG, LINK_SIM, ErResolve
+
+    cfg = ErResolve(0).config(str(tmp_path))
+    lcfg = LinkConfig(sim_threshold=LINK_SIM)
+    ccfg = CleanseConfig(**CLEANSE_CFG)
+    for c, attrs in (
+        (cfg, "metrics_dir run_id sim_threshold q num_hashes num_bands "
+              "max_block_size salt_threshold salt_shards costs checkpoint_dir "
+              "cc_max_iter cc_checkpoint_interval"),
+        (lcfg, "q num_hashes num_bands max_block_pairs salt_threshold "
+               "salt_shards sim_threshold costs"),
+        (ccfg, "min_tokens quality_threshold q num_hashes num_bands "
+               "jaccard_threshold"),
+    ):
+        for attr in attrs.split():
+            getattr(c, attr)
+    assert dedup.CC_LOCAL_THRESHOLD == DEDUP_CC_LOCAL_THRESHOLD
+
     docs = spark.createDataFrame(
         [("c1", "k", "alpha beta"), ("c2", "k", "alpha beta!"), ("c3", "j", "x")],
         "conv_id string, block_key string, doc string",
     )
-    cfg = ResolveConfig()
     cand = candidate_pairs(
         docs, id_col="conv_id", block_col="block_key", payload_cols=("doc",),
         max_block_size=cfg.max_block_size, salt_threshold=cfg.salt_threshold,
@@ -135,7 +157,6 @@ def test_benchmark_call_sites(spark):
     right = spark.createDataFrame([(2, "alpha beta!")], "id long, text string")
     bl = left.withColumn("block_key", F.lit("k"))
     br = right.withColumn("block_key", F.lit("k"))
-    lcfg = LinkConfig(sim_threshold=0.85)
     links = candidate_links(
         bl, br, id_col="id", block_col="block_key", payload_cols=("text",),
         payload_left=left, payload_right=right,

@@ -77,25 +77,58 @@ def test_edit_distance_per_pair_k_column(spark):
     assert [r.d for r in got] == [3, None, 0, None, 3, None, None]
 
 
-def test_pipeline_per_pair_k_matches_global_k(spark):
-    """Per-pair k and corpus-global k must produce identical matches
-    and clusters (only the pruning budget differs)."""
+@pytest.mark.parametrize("tau", [0.88, 0.94])
+def test_pipeline_per_pair_k_is_lossless(spark, tau):
+    """The per-pair k budget drops no match: ``resolve_entities``' match
+    set equals unbudgeted scoring (``k=None``) of the same candidates
+    filtered at the same threshold. At 0.88 every candidate of this
+    corpus matches (the least similar at 0.938); 0.94 puts matches
+    within 0.001 of the threshold, one of them exactly on it."""
+    from triple_accel_spark.operators.blocking import with_minhash_blocks
+    from triple_accel_spark.operators.pairs import candidate_pairs
+    from triple_accel_spark.operators.scoring import score_pairs
     from triple_accel_spark.pipeline import ResolveConfig, resolve_entities
     from triple_accel_spark.sources.transcripts import generate_transcripts
 
     tdf, _ = generate_transcripts(n_entities=60, seed=11)
     t = spark.createDataFrame(tdf)
-    r_pp = resolve_entities(t, ResolveConfig(sim_threshold=0.88, per_pair_k=True))
-    r_gk = resolve_entities(t, ResolveConfig(sim_threshold=0.88, per_pair_k=False))
-    m_pp = {(r.id_a, r.id_b) for r in r_pp.matches.collect()}
-    m_gk = {(r.id_a, r.id_b) for r in r_gk.matches.collect()}
-    assert m_pp == m_gk
-    c_pp = {(r.id, r.cluster_id) for r in r_pp.clusters.collect()}
-    c_gk = {(r.id, r.cluster_id) for r in r_gk.clusters.collect()}
-    assert c_pp == c_gk
-    # per-pair budgets are never looser than the corpus-global budget,
-    # so the scored frame cannot grow
-    assert r_pp.metrics["n_pairs_scored"] <= r_gk.metrics["n_pairs_scored"]
+    cfg = ResolveConfig(sim_threshold=tau)
+    with resolve_entities(t, cfg) as res:
+        got = {(r.id_a, r.id_b) for r in res.matches.collect()}
+        blocked = with_minhash_blocks(
+            res.docs, "doc", q=cfg.q, num_hashes=cfg.num_hashes,
+            num_bands=cfg.num_bands,
+        )
+        cand = candidate_pairs(
+            blocked, id_col="conv_id", block_col="block_key",
+            payload_cols=("doc",), max_block_size=cfg.max_block_size,
+            salt_threshold=cfg.salt_threshold, salt_shards=cfg.salt_shards,
+        )
+        full = score_pairs(cand, "doc_a", "doc_b", k=None, costs=cfg.costs,
+                           sim_threshold=cfg.sim_threshold)
+        want = {(r.id_a, r.id_b) for r in full.collect()}
+        for fr in cand._persisted_frames:
+            fr.unpersist()
+    assert got
+    assert got == want
+
+
+@pytest.mark.parametrize("a, b, dist", [
+    ("abcdefghij", "abcdefghiX", 1),
+    ("abcdefghijklmnopqrst", "abcdeXghijklmnoXqrst", 2),
+])
+def test_relative_k_col_keeps_pair_at_threshold(spark, a, b, dist):
+    """Boundary soundness of the per-pair budget: a pair whose similarity
+    is exactly the threshold survives. ``(1 - 0.9) * len`` rounds to
+    just below the integer distance in doubles, so only ``ceil`` keeps
+    the pair's band wide enough."""
+    from triple_accel_spark.operators.scoring import relative_k_col, score_pairs
+
+    tau = 0.9
+    pairs = spark.createDataFrame([(a, b)], "a string, b string")
+    got = score_pairs(pairs, "a", "b", k=relative_k_col(tau, "a", "b"),
+                      sim_threshold=tau).collect()
+    assert [(r.dist, r.sim) for r in got] == [(dist, pytest.approx(tau))]
 
 
 def test_cc_checkpoint_interval_invariant(cc_graph):

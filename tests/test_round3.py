@@ -338,16 +338,6 @@ class TestArrowVectorMath:
         plan = q._jdf.queryExecution().executedPlan().toString()
         assert plan.count("ArrowEvalPython") == 1
 
-    def test_lsh_all_pairs_arrow_equals_expr_pairs(self, vecs):
-        from triple_accel_spark.operators.similarity import lsh_all_pairs_topk
-
-        kw = dict(k=5, vec_col="v", id_col="vec_id", n_planes=4, n_tables=6)
-        ar = lsh_all_pairs_topk(vecs, vec_impl="arrow", **kw)
-        ex = lsh_all_pairs_topk(vecs, vec_impl="expr", **kw)
-        ra = {(r.query_id, r.vec_id, r.rank) for r in ar.collect()}
-        re_ = {(r.query_id, r.vec_id, r.rank) for r in ex.collect()}
-        assert ra == re_
-
 
 class TestPPMDecode:
     def test_round_trip(self):

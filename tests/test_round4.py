@@ -141,7 +141,8 @@ class TestPairwiseF1Lifecycle:
 class TestNullRaggedVectors:
     """ADVICE r3 (medium): a single NULL or ragged-length embedding row
     must degrade (row dropped / zero similarity), never crash the Arrow
-    batch — vec_impl='arrow' is the default for every ANN operator."""
+    batch — the Arrow route is the default or only one for every ANN
+    operator."""
 
     @pytest.fixture(scope="class")
     def dirty(self, spark):

@@ -8,14 +8,14 @@ primitives with its dedup operators in the standard order:
       -> quality score threshold
       -> language filter
       -> exact dedup (min-id representative per content digest)
-      -> near dedup (MinHash-LSH or SimHash route, min-id per
-         connected component)
+      -> near dedup (MinHash-LSH, min-id per connected component)
 
 Every stage is one of the independently hash-verified operators
 (``text.quality_features``, ``text.with_lang_id``, ``dedup.dedup_exact``,
 ``dedup.dedup_near``), so the COMPOSITE is SQL-replayable end to end —
 the ``corpus_cleanse_docs`` driver query hash-verifies the whole chain
-against DuckDB.
+against DuckDB. The cleanse's near dedup is always the MinHash route;
+the SimHash and embedding routes are ``dedup_near(method=...)``.
 
 Scale shape: the row-local stages are pure whole-stage-codegen
 projections/filters computed in ONE pass (flags, not sequential
@@ -46,16 +46,12 @@ class CleanseConfig:
     min_tokens: int = 5  # regex-token floor (0 disables)
     quality_threshold: float | None = 0.5  # None disables
     langs: tuple[str, ...] | None = None  # keep-list; None keeps all
-    exact_dedup: bool = True
-    near_dedup: bool = True
-    # near-dedup settings (see dedup.dedup_near)
+    # MinHash near-dedup settings (see dedup.dedup_near; the SimHash
+    # and embedding routes are called through dedup_near directly)
     q: int = 5
     num_hashes: int = 32
     num_bands: int = 16
     jaccard_threshold: float = 0.8
-    method: str = "minhash"
-    max_hamming: int = 3
-    gram_hash: str = "xxhash64"
 
 
 @dataclass
@@ -138,42 +134,33 @@ def prepare_training_corpus(
     ).collect()[0]
     metrics.update(counts.asDict())
 
-    persisted = [flagged]
     kept = flagged.where(F.col("_pl")).drop("_pv", "_pq", "_pl")
-    if cfg.exact_dedup:
-        # persisted BEFORE near-dedup consumes it, so the exact-dedup
-        # join executes exactly once per cleanse: dedup_near's eager
-        # interior materializes this cache, and every later consumer
-        # (the survivor flag join, the caller's reads of res.kept)
-        # reads from it instead of replaying the join
-        kept = dedup_exact(kept, text_col, id_col).persist()
-        persisted.append(kept)
-    if cfg.near_dedup:
-        survivors = dedup_near(
-            kept.select(id_col, text_col), text_col, id_col,
-            q=cfg.q, num_hashes=cfg.num_hashes, num_bands=cfg.num_bands,
-            jaccard_threshold=cfg.jaccard_threshold, method=cfg.method,
-            max_hamming=cfg.max_hamming, gram_hash=cfg.gram_hash,
-        ).select(F.col(id_col), F.lit(True).alias("_nd"))
-        # LEFT join keeps every post-exact row with a survivor flag:
-        # ONE persisted frame + ONE action yields both stage counts
-        # (n_exact = all rows, n_near = flagged rows) and backs the
-        # returned `kept`, so the survivor join also runs exactly once
-        flagged_near = kept.join(survivors, id_col, "left").persist()
-        persisted.append(flagged_near)
-        row = flagged_near.agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.count(F.when(F.col("_nd"), 1)).alias("n_near"),
-        ).collect()[0]
-        if cfg.exact_dedup:
-            metrics["n_exact"] = row["n_exact"]
-        metrics["n_near"] = row["n_near"]
-        kept = flagged_near.where(F.col("_nd")).drop("_nd")
-    elif cfg.exact_dedup:
-        metrics["n_exact"] = kept.count()
+    # persisted BEFORE near-dedup consumes it, so the exact-dedup join
+    # executes exactly once per cleanse: dedup_near's eager interior
+    # materializes this cache, and every later consumer (the survivor
+    # flag join, the caller's reads of res.kept) reads from it instead
+    # of replaying the join
+    exact = dedup_exact(kept, text_col, id_col).persist()
+    survivors = dedup_near(
+        exact.select(id_col, text_col), text_col, id_col,
+        q=cfg.q, num_hashes=cfg.num_hashes, num_bands=cfg.num_bands,
+        jaccard_threshold=cfg.jaccard_threshold,
+    ).select(F.col(id_col), F.lit(True).alias("_nd"))
+    # LEFT join keeps every post-exact row with a survivor flag: ONE
+    # persisted frame + ONE action yields both stage counts (n_exact =
+    # all rows, n_near = flagged rows) and backs the returned `kept`,
+    # so the survivor join also runs exactly once
+    flagged_near = exact.join(survivors, id_col, "left").persist()
+    counts = flagged_near.agg(
+        F.count(F.lit(1)).alias("n_exact"),
+        F.count(F.when(F.col("_nd"), 1)).alias("n_near"),
+    ).collect()[0]
+    metrics.update(counts.asDict())
     # the persisted frames stay cached: the returned frame derives from
     # them, so the caller consumes `kept` then releases via
     # CleanseResult.unpersist (context-manager form supported) — same
     # contract as ResolveResult
-    return CleanseResult(kept=kept, metrics=metrics,
-                         _persisted_frames=persisted)
+    return CleanseResult(
+        kept=flagged_near.where(F.col("_nd")).drop("_nd"), metrics=metrics,
+        _persisted_frames=[flagged, exact, flagged_near],
+    )

@@ -41,6 +41,13 @@ from triple_accel_spark.operators.blocking import (
 )
 from triple_accel_spark.operators.pairs import candidate_pairs
 
+# near-dup edge graphs at or below this edge count cluster via the
+# bounded driver union-find: the star contraction's ~10 stages/round
+# dominate small graphs (same routing and justification as the
+# pipeline's cc_local_threshold — a latency optimization that
+# 10^12-scale never triggers, never a scalability crutch)
+CC_LOCAL_THRESHOLD = 100_000
+
 
 def exact_duplicates(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -266,7 +273,6 @@ def dedup_near(
     gram_hash: str = "xxhash64",
     cosine_threshold: float = 0.95,
     n_planes: int = 12,
-    cc_local_threshold: int = 100_000,
 ) -> DataFrame:
     """Keep one representative (min id) per NEAR-duplicate group: the
     standard training-corpus dedup endpoint. Composition: near-dup
@@ -315,13 +321,9 @@ def dedup_near(
     e = edges.select("id_a", "id_b").localCheckpoint(eager=True)
     for fr in getattr(edges, "_persisted_frames", []):
         fr.unpersist()
-    # counting the checkpointed edge list is one cheap job; match
-    # graphs at or below the threshold cluster via the bounded driver
-    # union-find (the star contraction's ~10 stages/round dominate
-    # small graphs — same routing + justification as the pipeline's
-    # cc_local_threshold: a latency optimization that 10^12-scale
-    # never triggers, never a scalability crutch). 0 disables.
-    if cc_local_threshold and e.count() <= cc_local_threshold:
+    # counting the checkpointed edge list is one cheap job that routes
+    # small graphs to the local union-find (see CC_LOCAL_THRESHOLD)
+    if e.count() <= CC_LOCAL_THRESHOLD:
         from triple_accel_spark.operators.clustering import (
             local_connected_components,
         )

@@ -17,7 +17,7 @@ pair volume ``|L_b|·|R_b|`` and an optional early length prune.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -42,11 +42,11 @@ class LinkConfig:
     blocking: str = "minhash"  # or "prefix" (SQL-expressible, oracle-able)
     prefix_len: int = 16
     sim_threshold: float = 0.88
-    per_pair_k: bool = True
     costs: EditCosts = field(default_factory=lambda: LEVENSHTEIN_COSTS)
-    # "edit" (normalized edit similarity, k-prunable) or "jaro_winkler"
-    # (the name-field comparator; per-pair k does not apply — the
-    # Catalyst-native prune becomes the JW length-ratio bound)
+    # "edit" (normalized edit similarity; k is always per pair,
+    # ceil((1-sim_threshold) * max(len_l, len_r))) or "jaro_winkler"
+    # (the name-field comparator; no k — the Catalyst-native prune
+    # becomes the JW length-ratio bound)
     scorer: str = "edit"
     max_block_pairs: int | None = 1_000_000
     salt_threshold: int = 4096
@@ -95,6 +95,7 @@ def link_records(
     """
     cfg = cfg or LinkConfig()
     metrics: dict = {}
+    edit = cfg.scorer == "edit"
 
     def block(df):
         if cfg.blocking == "prefix":
@@ -117,28 +118,17 @@ def link_records(
         max_block_pairs=cfg.max_block_pairs,
         salt_threshold=cfg.salt_threshold,
         salt_shards=cfg.salt_shards,
-        # with per-pair k the scoring stage filters on exactly this
-        # bound anyway (length_prefilter + relative_k_col), so the
-        # early prune is a pure plan optimization; without per-pair k
-        # the caller wants every candidate scored — skip it. The prune
-        # bound is edit-distance-specific: under the jaro_winkler
-        # scorer it stays off and jw_length_bound prunes at scoring.
-        prune_threshold=(
-            cfg.sim_threshold
-            if cfg.per_pair_k and cfg.scorer == "edit"
-            else None
-        ),
-        prune_text_col=(
-            text_col if cfg.per_pair_k and cfg.scorer == "edit" else None
-        ),
+        # the scoring stage filters on exactly this bound anyway
+        # (length_prefilter + relative_k_col), so the early prune is a
+        # pure plan optimization. The prune bound is
+        # edit-distance-specific: under the jaro_winkler scorer it
+        # stays off and jw_length_bound prunes at scoring.
+        prune_threshold=cfg.sim_threshold if edit else None,
+        prune_text_col=text_col if edit else None,
         prune_costs=cfg.costs,
     )
     tl, tr = f"{text_col}_l", f"{text_col}_r"
-    k = (
-        relative_k_col(cfg.sim_threshold, tl, tr)
-        if cfg.per_pair_k and cfg.scorer == "edit"
-        else None
-    )
+    k = relative_k_col(cfg.sim_threshold, tl, tr) if edit else None
     scored = score_pairs(
         pairs, tl, tr, k=k, costs=cfg.costs, sim_threshold=None,
         scorer=cfg.scorer,
@@ -205,18 +195,10 @@ def assign_to_clusters(
     matters, run ``pipeline.resolve_entities`` on the union instead —
     incremental assignment is the O(new × corpus-candidates) path for
     appending to a settled clustering without touching it."""
-    cfg = cfg or LinkConfig(best_per="right")
     res = link_records(
         clustered.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")),
         new_records.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")),
-        cfg=LinkConfig(
-            q=cfg.q, num_hashes=cfg.num_hashes, num_bands=cfg.num_bands,
-            blocking=cfg.blocking, prefix_len=cfg.prefix_len,
-            sim_threshold=cfg.sim_threshold, per_pair_k=cfg.per_pair_k,
-            costs=cfg.costs, max_block_pairs=cfg.max_block_pairs,
-            salt_threshold=cfg.salt_threshold, salt_shards=cfg.salt_shards,
-            best_per="right", scorer=cfg.scorer,
-        ),
+        cfg=replace(cfg or LinkConfig(), best_per="right"),
     )
     labels = clustered.select(
         F.col(id_col).alias("id_l"), F.col(cluster_col).alias("_cl")

@@ -78,12 +78,6 @@ def score_pairs(
     return df
 
 
-def relative_k(threshold: float, max_len_hint: int) -> int:
-    """Distance budget implied by a similarity threshold at a length
-    scale: ``sim >= t  <=>  dist <= (1-t) * max_len``."""
-    return max(1, int((1.0 - threshold) * max_len_hint))
-
-
 def relative_k_col(threshold: float, text_a, text_b) -> Column:
     """Per-PAIR distance budget as a Column:
     ``ceil((1-t) * greatest(len_a, len_b))``.
@@ -91,8 +85,8 @@ def relative_k_col(threshold: float, text_a, text_b) -> Column:
     ``sim >= t  <=>  dist <= (1-t)*maxlen``, so any cutoff >= that
     boundary loses no match; ``ceil`` (rather than ``floor``) keeps the
     bound safe against double rounding of ``(1-t)*maxlen`` at integer
-    boundaries. A long corpus outlier no longer widens the band of
-    unrelated short pairs (vs one corpus-global k)."""
+    boundaries. A long corpus outlier never widens the band of
+    unrelated short pairs."""
     denom = F.greatest(F.length(text_a), F.length(text_b), F.lit(1))
     return F.ceil(F.lit(1.0 - threshold) * denom.cast("double")).cast("int")
 

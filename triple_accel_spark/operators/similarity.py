@@ -21,15 +21,18 @@
                            bucket join (the other standard scale path;
                            full-probe degenerates to the exact result).
 
-Vector math has two interchangeable implementations selected by
-``vec_impl``: ``"arrow"`` (default — BLAS-batched pandas UDFs; Spark
-evaluates higher-order array functions INTERPRETED per element, a
-large constant-factor tax at corpus scale) and ``"expr"`` (pure
-Column expressions — used by the DuckDB-oracle driver queries because
-their sequential fold order reproduces DuckDB's accumulation
-bit-for-bit). Both produce identical results up to the last-ulp
-summation-order difference; tests assert exact bucket equality and
-cosine agreement at 1e-9 on the test corpus.
+Vector math runs as BLAS-batched Arrow pandas UDFs: Spark evaluates
+higher-order array functions INTERPRETED per element, a large
+constant-factor tax at corpus scale. The pure Column-expression forms
+(``cosine_expr``, ``hyperplane_bucket``) are kept because their
+sequential fold order reproduces DuckDB's accumulation bit-for-bit.
+``vec_impl`` (``"arrow"`` default, or ``"expr"``) selects between them
+only on ``brute_force_topk``, ``brute_force_all_pairs_topk`` and
+``dedup.embedding_near_duplicates`` — the three operators whose DuckDB
+oracle queries (``__spark_entry__.py``) run both ways; ``lsh_topk``,
+``ivf_topk`` and ``lsh_all_pairs_topk`` are Arrow only. The two forms
+agree up to the last-ulp summation-order difference; tests assert exact
+bucket equality and cosine agreement at 1e-9 on the test corpus.
 
 Hyperplanes are generated from ``xxhash64`` of (plane, dim) so they are
 deterministic, identical on every executor, and need no broadcast of
@@ -363,7 +366,6 @@ def lsh_topk(
     n_planes: int = 8,
     n_tables: int = 4,
     seed: int = 42,
-    vec_impl: str = "arrow",
     dim: int | None = None,
 ) -> DataFrame:
     """Approximate cosine top-k via multi-table hyperplane LSH.
@@ -379,44 +381,31 @@ def lsh_topk(
     q = queries.where(F.col(vec_col).isNotNull()).select(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qvec")
     )
-    if vec_impl == "arrow":
-        # ALL tables' buckets from ONE stacked matmul per side (one
-        # dimension probe + one UDF each — per-table UDFs would run
-        # 2*n_tables eager probe jobs and n_tables Arrow evals)
-        cb = c.select(
-            id_col, "cvec",
-            F.posexplode(
-                multitable_buckets_arrow(
-                    c, F.col("cvec"), n_planes, n_tables, seed, dim=dim
-                )
-            ).alias("_t", "_b"),
-        )
-        qb = q.select(
-            "query_id", "qvec",
-            F.posexplode(
-                multitable_buckets_arrow(
-                    q, F.col("qvec"), n_planes, n_tables, seed, dim=dim
-                )
-            ).alias("_t", "_b"),
-        )
-        cand = cb.join(F.broadcast(qb), ["_t", "_b"]).select(
-            "query_id", id_col, "qvec", "cvec"
-        )
-    else:
-        cand = None
-        for t in range(n_tables):
-            cb = c.withColumn(
-                "bucket", hyperplane_bucket(F.col("cvec"), n_planes, seed + t)
+    # ALL tables' buckets from ONE stacked matmul per side (one
+    # dimension probe + one UDF each — per-table UDFs would run
+    # 2*n_tables eager probe jobs and n_tables Arrow evals)
+    cb = c.select(
+        id_col, "cvec",
+        F.posexplode(
+            multitable_buckets_arrow(
+                c, F.col("cvec"), n_planes, n_tables, seed, dim=dim
             )
-            qb = q.withColumn(
-                "bucket", hyperplane_bucket(F.col("qvec"), n_planes, seed + t)
+        ).alias("_t", "_b"),
+    )
+    qb = q.select(
+        "query_id", "qvec",
+        F.posexplode(
+            multitable_buckets_arrow(
+                q, F.col("qvec"), n_planes, n_tables, seed, dim=dim
             )
-            hit = cb.join(F.broadcast(qb), "bucket").select(
-                "query_id", id_col, "qvec", "cvec"
-            )
-            cand = hit if cand is None else cand.union(hit)
-    cand = cand.dropDuplicates(["query_id", id_col])
-    scored = cand.withColumn("cosine", _cosine("qvec", "cvec", vec_impl))
+        ).alias("_t", "_b"),
+    )
+    cand = (
+        cb.join(F.broadcast(qb), ["_t", "_b"])
+        .select("query_id", id_col, "qvec", "cvec")
+        .dropDuplicates(["query_id", id_col])
+    )
+    scored = cand.withColumn("cosine", cosine_arrow("qvec", "cvec"))
     return topk_per_key(scored, "query_id", k, tiebreak_col=id_col).select(
         "query_id", id_col, "cosine", "rank"
     )
@@ -510,7 +499,6 @@ def ivf_topk(
     query_id_col: str = "query_id",
     n_centroids: int = 64,
     n_probe: int = 8,
-    vec_impl: str = "arrow",
     refine_iters: int = 0,
     assign_replicas: int = 1,
 ) -> DataFrame:
@@ -576,7 +564,7 @@ def ivf_topk(
             "cid", nc1(F.col("cvec")).getItem(0)
         )
         scored = c.join(F.broadcast(q), "cid").withColumn(
-            "cosine", _cosine("qvec", "cvec", vec_impl)
+            "cosine", cosine_arrow("qvec", "cvec")
         )
     else:
         # replicated index: a pair can meet in up to `a` buckets —
@@ -607,7 +595,7 @@ def ivf_topk(
                 ),
                 "query_id",
             )
-            .withColumn("cosine", _cosine("qvec", "cvec", vec_impl))
+            .withColumn("cosine", cosine_arrow("qvec", "cvec"))
         )
     return topk_per_key(scored, "query_id", k, tiebreak_col=id_col).select(
         "query_id", id_col, "cosine", "rank"
@@ -649,7 +637,6 @@ def lsh_all_pairs_topk(
     n_tables: int = 12,
     seed: int = 42,
     max_block_size: int | None = 100_000,
-    vec_impl: str = "arrow",
     dim: int | None = None,
 ) -> DataFrame:
     """Approximate corpus x corpus top-k (no broadcastable query side):
@@ -673,29 +660,17 @@ def lsh_all_pairs_topk(
     base = corpus.where(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("rid"), F.col(vec_col).alias("vec")
     )
-    if vec_impl == "arrow":
-        # ALL tables' sign buckets from ONE (rows, dim) @ (dim, T*P)
-        # matmul per Arrow batch; table keys are then mixed JVM-side
-        # with the same xxhash64(table, bucket) layout as the Column
-        # form (posexplode's pos == the table index, same int type)
-        buckets = multitable_buckets_arrow(
-            base, F.col("vec"), n_planes, n_tables, seed, dim=dim
-        )
-        blocked = base.select(
-            "rid", "vec", F.posexplode(buckets).alias("_t", "_b")
-        ).select(
-            "rid", "vec", F.xxhash64(F.col("_t"), F.col("_b")).alias("block_key")
-        )
-    else:
-        keys = F.array(
-            *[
-                F.xxhash64(
-                    F.lit(t), hyperplane_bucket(F.col("vec"), n_planes, seed + t)
-                )
-                for t in range(n_tables)
-            ]
-        )
-        blocked = base.withColumn("block_key", F.explode(keys))
+    # ALL tables' sign buckets from ONE (rows, dim) @ (dim, T*P) matmul
+    # per Arrow batch; each table key is mixed JVM-side as
+    # xxhash64(table, bucket) (posexplode's pos is the table index)
+    buckets = multitable_buckets_arrow(
+        base, F.col("vec"), n_planes, n_tables, seed, dim=dim
+    )
+    blocked = base.select(
+        "rid", "vec", F.posexplode(buckets).alias("_t", "_b")
+    ).select(
+        "rid", "vec", F.xxhash64(F.col("_t"), F.col("_b")).alias("block_key")
+    )
     pairs = candidate_pairs(
         blocked,
         id_col="rid",
@@ -703,7 +678,7 @@ def lsh_all_pairs_topk(
         payload_cols=("vec",),
         max_block_size=max_block_size,
     )
-    scored = pairs.withColumn("cosine", _cosine("vec_a", "vec_b", vec_impl))
+    scored = pairs.withColumn("cosine", cosine_arrow("vec_a", "vec_b"))
     # round-6: expand each unordered pair into both directions with ONE
     # explode over the already-computed cosine attribute. The previous
     # two-branch union referenced `scored` twice, duplicating the whole

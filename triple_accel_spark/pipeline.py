@@ -44,13 +44,9 @@ class ResolveConfig:
     # also what the DuckDB-oracled driver queries use)
     blocking: str = "minhash"
     prefix_len: int = 16
+    # scoring uses the reference's per-call k semantics: each pair's
+    # budget is ceil((1-sim_threshold) * max(len_a, len_b))
     sim_threshold: float = 0.88
-    k_frac: float = 0.2  # distance budget as a fraction of doc length
-    # per-pair k = ceil((1-sim_threshold) * max(len_a, len_b)) — the
-    # reference's per-call k semantics; False falls back to one
-    # corpus-global k from max doc_len (an outlier-long doc then widens
-    # every pair's band, and costs an extra driver action)
-    per_pair_k: bool = True
     max_block_size: int | None = 5000
     salt_threshold: int = 64
     salt_shards: int = 8
@@ -114,31 +110,17 @@ def resolve_entities(transcripts: DataFrame, cfg: ResolveConfig | None = None) -
     docs = assemble_documents(transcripts).cache()
     commit(docs, "docs", size_col="doc", id_col="conv_id")
 
-    if cfg.per_pair_k:
-        # per-pair distance budget (reference per-call k semantics).
-        # Round-6: the docs cache is materialized HERE (one count, which
-        # also provides the n_docs metric) — blocking, the candidate
-        # machinery and the payload re-attach all fan out from `docs`,
-        # and with a cold cache those concurrent branches each re-ran
-        # the assemble aggregation (profiled: 4 duplicate evaluations
-        # inside one pipeline run; Spark's block cache does not
-        # serialize concurrent cold computes).
-        metrics["n_docs"] = docs.count()
-        k = relative_k_col(cfg.sim_threshold, "doc_a", "doc_b")
-        metrics["k_cutoff"] = "per_pair"
-    else:
-        # corpus-global budget: k such that sim_threshold is reachable
-        # for the longest docs (the per-pair normalized threshold is
-        # still enforced exactly afterwards). The max-length probe is
-        # the ONE pre-blocking action in this mode, fused with the
-        # n_docs census so it is not a separate pass
-        row = docs.agg(
-            F.count(F.lit(1)).alias("n"), F.max("doc_len").alias("m")
-        ).collect()[0]
-        metrics["n_docs"] = row["n"]
-        max_len = row["m"] or 1
-        k = max(1, int((1.0 - cfg.sim_threshold) * max_len) + 1)
-        metrics["k_cutoff"] = k
+    # Round-6: the docs cache is materialized HERE (one count, which
+    # also provides the n_docs metric) — blocking, the candidate
+    # machinery and the payload re-attach all fan out from `docs`, and
+    # with a cold cache those concurrent branches each re-ran the
+    # assemble aggregation (profiled: 4 duplicate evaluations inside
+    # one pipeline run; Spark's block cache does not serialize
+    # concurrent cold computes).
+    metrics["n_docs"] = docs.count()
+    # per-pair distance budget (reference per-call k semantics)
+    k = relative_k_col(cfg.sim_threshold, "doc_a", "doc_b")
+    metrics["k_cutoff"] = "per_pair"
 
     if cfg.blocking == "prefix":
         blocked = with_prefix_blocks(docs, "doc", prefix_len=cfg.prefix_len)
@@ -177,8 +159,6 @@ def resolve_entities(transcripts: DataFrame, cfg: ResolveConfig | None = None) -
     # the end-to-end wall alone
     metrics["t_score_action"] = round(_time.time() - _t0, 3)
     _t0 = _time.time()
-    if "n_docs" not in metrics:
-        metrics["n_docs"] = docs.count()
     commit(scored, "pairs_scored", size_col="doc_a", id_col="id_a")
     if cfg.metrics_dir:
         # lineage mode pays one extra census pass per stage anyway;
