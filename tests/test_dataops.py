@@ -72,6 +72,54 @@ def test_minhash_lsh_duplicates(spark):
     assert not any(3 in p for p in pairs)
 
 
+@pytest.mark.parametrize(
+    "kwargs",
+    [{"jaccard_threshold": 0.0}, {"num_hashes": 30, "num_bands": 8}],
+    ids=["threshold", "bands"],
+)
+def test_minhash_lsh_rejects_bad_arguments_before_any_job(spark, kwargs):
+    """An invalid call raises before it runs a Spark job (and so before
+    it persists anything it could leave cached)."""
+    sc = spark.sparkContext
+    group = f"minhash-args-{'-'.join(kwargs)}"
+    df = spark.createDataFrame([(1, "abcdefgh"), (2, "abcdefgi")],
+                               "doc_id bigint, text string")
+    sc.setJobGroup(group, "argument validation")
+    try:
+        with pytest.raises(ValueError):
+            minhash_lsh_duplicates(df, **kwargs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+@pytest.mark.parametrize(
+    "text",
+    ["abcdefghijklmnopqrstuvwxyz0123456789!#$%&()*",
+     "".join(chr(0x4E00 + i) for i in range(44))],
+    ids=["ascii", "multibyte"],
+)
+def test_minhash_containment_bound_is_sound_at_its_boundary(spark, text):
+    """The containment bound ``min(|A|,|B|) / max(|A|,|B|) >= τ`` keeps a
+    pair whose gram sets nest with ``|A| / |B| = τ`` (so ``J = τ``) and
+    drops the same pair with one gram fewer. 44 distinct characters give
+    40 distinct 5-grams; a 24-character prefix gives 20 of them. Grams
+    are characters, not UTF-8 bytes. With one hash per band, a pair
+    misses candidacy only if all 16 of its minima differ."""
+    rows = [(1, text), (2, text[:24]), (3, text[:23])]
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    out = minhash_lsh_duplicates(df, q=5, num_hashes=16, num_bands=16,
+                                 jaccard_threshold=0.5)
+    try:
+        got = {(r.id_a, r.id_b): r.jaccard for r in out.collect()}
+    finally:
+        for fr in out._persisted_frames:
+            fr.unpersist()
+    # (1, 2): J = 20/40 = τ, kept; (1, 3): 19/40, dropped; (2, 3): 19/20
+    assert got == {(1, 2): 0.5, (2, 3): 0.95}
+
+
 def test_dedup_near_keeps_min_id_per_group(spark):
     from triple_accel_spark.operators.dedup import dedup_near
 

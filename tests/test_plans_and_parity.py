@@ -110,10 +110,14 @@ def test_commit_stage_metrics_idempotent(spark, tmp_path):
     assert total == 100
 
 
-def test_minhash_verify_plan_hash_join_no_arrays(spark):
-    """The exact-Jaccard verification must (a) hash-join the exploded
-    gram stream (sort-merge would sort it twice — measured 9x slower),
-    and (b) carry NO array columns through any shuffle."""
+def test_minhash_verify_plan_one_gram_aggregation(spark):
+    """The exact-Jaccard verification must not join or shuffle on the
+    gram hash: the exploded gram rows feed exactly one per-document
+    aggregation, which builds both the gram-hash set and the MinHash
+    signature. Every plan line naming the gram-hash column is its
+    defining projection or that aggregation (partial or final)."""
+    import re
+
     from triple_accel_spark.operators.dedup import minhash_lsh_duplicates
 
     df = spark.createDataFrame(
@@ -121,11 +125,24 @@ def test_minhash_verify_plan_hash_join_no_arrays(spark):
         "doc_id long, text string",
     )
     out = minhash_lsh_duplicates(df, jaccard_threshold=0.5)
-    plan = _plan(out)
-    assert "ShuffledHashJoin" in plan
-    assert "collect_set" not in plan and "collect_list" not in plan
-    for fr in getattr(out, "_persisted_frames", []):
-        fr.unpersist()
+    try:
+        plan = _plan(out)
+        gh = re.search(r"AS (gh#\d+)", plan).group(1)
+        aggs = set()
+        for line in plan.splitlines():
+            if gh not in line or f"AS {gh}" in line:
+                continue
+            assert "Exchange" not in line and "Join" not in line, line
+            agg = re.search(r"Aggregate\(keys=\[rid#\d+L?\], functions=\[.*?\]", line)
+            assert agg, line
+            aggs.add(agg.group(0).replace("partial_", ""))
+        assert len(aggs) == 1, aggs
+        (agg,) = aggs
+        assert f"collect_set({gh}" in agg
+        assert f"min(xxhash64({gh}" in agg
+    finally:
+        for fr in out._persisted_frames:
+            fr.unpersist()
 
 
 def test_with_simhash_single_aggregation(spark):

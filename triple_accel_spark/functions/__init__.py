@@ -369,16 +369,6 @@ def hamming_search(
     return _udf(needle, haystack)
 
 
-def normalized_similarity(
-    a, b, k: int | None = None, costs: EditCosts = LEVENSHTEIN_COSTS
-) -> Column:
-    """``1 - dist / greatest(len(a), len(b))`` in [0, 1]; NULL when the
-    k-cutoff pruned the pair. The division happens JVM-side."""
-    d = edit_distance(a, b, k, costs)
-    denom = F.greatest(F.length(a), F.length(b), F.lit(1))
-    return (F.lit(1.0) - d.cast("double") / denom.cast("double")).alias("sim")
-
-
 def length_prefilter(
     a, b, k: int | Column, costs: EditCosts = LEVENSHTEIN_COSTS
 ) -> Column:

@@ -43,7 +43,8 @@ def rebalance_small_scan(df: DataFrame) -> DataFrame:
     ``repartition`` is round-robin with Spark's default
     sort-before-repartition, so retries stay deterministic, and every
     caller aggregates with partition-order-insensitive functions
-    (min / count / bit_xor / distinct), so results are identical."""
+    (min / count / bit_xor / distinct, and collect_set read only through
+    set sizes), so results are identical."""
     try:
         files = df.inputFiles()
     except Exception:
@@ -152,23 +153,22 @@ def minhash_signature(grams: Column, num_hashes: int = 16) -> Column:
     )
 
 
-def minhash_band_keys(
-    signature: Column, num_bands: int, band_size: int
-) -> Column:
-    """LSH band keys: hash each ``band_size`` slice of the signature;
-    array<bigint> of length ``num_bands``. Band index is mixed in so
-    keys from different bands never collide. Hash layout matches
-    ``minhash_band_table`` exactly (``xxhash64(band, h0, h1, ...)``
-    over bigint args) so expression-path keys (streaming) and
-    aggregation-path keys (batch) are interchangeable."""
-    keys = []
-    for b in range(num_bands):
-        elems = [
-            F.element_at(signature, b * band_size + i + 1)
-            for i in range(band_size)
-        ]
-        keys.append(F.xxhash64(F.lit(b), *elems))
-    return F.array(*keys)
+def minhash_band_keys(hashes: list[Column], num_bands: int) -> list[Column]:
+    """LSH band keys of a MinHash signature given as its ``num_hashes``
+    per-seed Columns: ``xxhash64(band, h_i, ...)`` over each contiguous
+    slice of ``num_hashes / num_bands`` hashes. The band index is mixed
+    in so keys from different bands never collide. The one home of the
+    key layout: the aggregation path (``minhash_band_table``,
+    ``dedup.minhash_lsh_duplicates``) passes its ``_h<s>`` columns and
+    the expression path (``with_minhash_blocks_expr``) the signature's
+    elements, so the two paths' keys are interchangeable."""
+    if len(hashes) % num_bands:
+        raise ValueError("num_hashes must be divisible by num_bands")
+    size = len(hashes) // num_bands
+    return [
+        F.xxhash64(F.lit(b), *hashes[b * size:(b + 1) * size])
+        for b in range(num_bands)
+    ]
 
 
 def minhash_band_table(
@@ -190,9 +190,9 @@ def minhash_band_table(
     ``groupBy(id)`` with ``num_hashes`` ``min(xxhash64(gram, seed))``
     aggregates. The shuffle carries only (id, 16 longs) regardless of
     document size; at 10^12 turns this is the only viable shape."""
-    if num_hashes % num_bands:
-        raise ValueError("num_hashes must be divisible by num_bands")
-    band_size = num_hashes // num_bands
+    bands = minhash_band_keys(
+        [F.col(f"_h{s}") for s in range(num_hashes)], num_bands
+    )
     # NULL policy: a NULL document yields no band keys (it cannot be
     # blocked or matched) — enforced identically in the expr path.
     # Rebalance the RAW projection and normalize AFTER it, so the regex
@@ -210,10 +210,6 @@ def minhash_band_table(
             for s in range(num_hashes)
         ]
     )
-    bands = []
-    for b in range(num_bands):
-        cols = [F.col(f"_h{i}") for i in range(b * band_size, (b + 1) * band_size)]
-        bands.append(F.xxhash64(F.lit(b), *cols))
     return sig.select(
         F.col("_mid").alias(id_col), F.explode(F.array(*bands)).alias(out_col)
     )
@@ -259,18 +255,19 @@ def with_minhash_blocks_expr(
     (a streaming query allows at most one aggregation) and with
     already-aggregated frames. Slower per row at batch scale (Spark
     higher-order functions evaluate interpreted); prefer the
-    aggregation path for large batch jobs.
+    aggregation path for large batch jobs. Its one library caller is
+    ``streaming.incremental``, which cannot run the aggregation form on
+    a stream; it stays as long as that caller does.
 
     NULL policy (matches the batch path): rows with NULL text emit no
     block rows — the batch path drops them because a NULL text yields
     no gram rows to aggregate, so here the key array is nulled out
     before the explode."""
-    if num_hashes % num_bands:
-        raise ValueError("num_hashes must be divisible by num_bands")
-    band_size = num_hashes // num_bands
     norm = normalized_text(text_col, lowercase)
     sig = minhash_signature(qgrams(norm, q), num_hashes)
-    keys = minhash_band_keys(sig, num_bands, band_size)
+    keys = F.array(*minhash_band_keys(
+        [F.element_at(sig, s + 1) for s in range(num_hashes)], num_bands
+    ))
     return df.withColumn(
         out_col, F.explode(F.when(norm.isNotNull(), keys))
     )

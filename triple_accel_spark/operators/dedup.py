@@ -13,13 +13,16 @@ table (``doc_id, text``):
 * ``ngram_jaccard``         — exact n-gram Jaccard for a pair frame.
 * ``embedding_near_duplicates`` — cosine near-dup over a vector column.
 
-All hot paths are built-in Column expressions (JVM, codegen). Exact
-Jaccard verification is ARRAY-FREE: the candidate-pair list is joined
-to the exploded ``(doc, gram_hash)`` table and intersections are
-counted per pair, so every shuffle carries fixed-width rows (ids +
-one long) — no per-row gram-set arrays ever cross a shuffle. Candidate
-generation is keyed by LSH bucket (bounded skew; cap + salt reuse
-``pairs.candidate_pairs``).
+All hot paths are built-in Column expressions (JVM, codegen). Every
+near-duplicate route has one shape: a per-document sketch from one
+aggregation, candidate pairs from ``pairs.candidate_pairs`` (keyed by
+LSH bucket; bounded skew via its cap and salt) with each side's sketch
+attached, then one column expression per pair. Exact Jaccard
+verification compares the two documents' gram-hash sets with
+``array_intersect``. A set holds at most ``len - q + 1`` longs, so a
+pair carries data bounded by its documents' lengths, like the text
+payload edit scoring re-attaches per pair; no shuffle row count is
+multiplied by the number of grams.
 
 Persist lifecycle: frames persisted internally are exposed on the
 returned DataFrame as ``df._persisted_frames`` so materializing
@@ -35,6 +38,7 @@ from pyspark.sql import functions as F
 from triple_accel_spark.operators.blocking import (
     exploded_gram_rows,
     gram_hash_expr,
+    minhash_band_keys,
     normalized_text,
     qgrams,
     rebalance_small_scan,
@@ -131,19 +135,28 @@ def minhash_lsh_duplicates(
     ``1 - (1 - s^(num_hashes/num_bands))^num_bands`` — defaults give
     >99% recall at s >= 0.7.
 
-    Verification is array-free (100 TB shape): |A∩B| is a per-pair
-    COUNT over the exploded ``(rid, gram_hash)`` table joined to the
-    candidate list, |A|/|B| are per-doc counts, and
-    ``union = |A| + |B| - inter`` — every shuffle row is fixed-width.
-    A lossless containment bound (``J <= min(|A|,|B|) / max(|A|,|B|)``)
-    prunes length-mismatched candidates before the counting join.
+    Shape (the same as the SimHash and embedding routes): one
+    per-document sketch, candidates from ``candidate_pairs`` (ids only
+    here), then one column expression per pair. A single
+    ``groupBy(rid)`` over the exploded gram-hash rows builds both the
+    document's distinct gram-hash set and its MinHash signature. Each
+    candidate gets both sides' sets by id; a lossless containment bound
+    (``J <= min(|A|,|B|) / max(|A|,|B|)``) prunes length-mismatched
+    pairs, and ``|A∩B| = size(array_intersect(A, B))``,
+    ``J = |A∩B| / (|A| + |B| - |A∩B|)``. A set holds at most
+    ``len - q + 1`` longs, so what a pair carries is bounded by its
+    documents' lengths, as is the text payload edit scoring re-attaches
+    per pair; nothing is multiplied by a document's gram count.
 
     NULL policy (matches ``blocking.minhash_band_table``): NULL-text
     rows yield no grams and therefore no candidate pairs — a NULL
     document cannot be near-anything, including another NULL document."""
-    if num_hashes % num_bands:
-        raise ValueError("num_hashes must be divisible by num_bands")
-    band_size = num_hashes // num_bands
+    if jaccard_threshold <= 0:
+        raise ValueError("jaccard_threshold must be > 0 (pairs with an "
+                         "empty gram intersection are pruned, not scored)")
+    bands = minhash_band_keys(
+        [F.col(f"_h{s}") for s in range(num_hashes)], num_bands
+    )
     # rebalance the RAW projection, normalize after: the regex
     # normalization otherwise evaluates inside the (possibly one-task)
     # scan stage, serializing it before the shuffle spreads the rows
@@ -153,36 +166,23 @@ def minhash_lsh_duplicates(
     base = raw.select("rid", normalized_text("_raw").alias("_t")).where(
         F.col("_t").isNotNull()
     )
-    gram_rows = exploded_gram_rows(base, "rid", "_t", q)
-    # distinct hashed gram set as ROWS (rid, gh): reused for set sizes
-    # and for the intersection co-count; consumed 3x -> persist (handle
-    # surfaced via _persisted_frames, see module docstring)
-    gset = (
-        gram_rows.select("rid", F.xxhash64("_g", F.lit(-1)).alias("gh"))
-        .distinct()
-        .persist()
+    gram_rows = exploded_gram_rows(base, "rid", "_t", q).select(
+        "rid", F.xxhash64("_g", F.lit(-1)).alias("gh")
     )
-    # eager for the same reason as candidate_pairs' base: three
-    # downstream branches (sizes, signatures, verify) race the cold
-    # cache and re-run the corpus gram explode concurrently otherwise
-    gset.count()
-    sizes = gset.groupBy("rid").agg(F.count(F.lit(1)).alias("ng"))
-    # minhash signature from the persisted DISTINCT gram table: min
-    # over the set equals min over the multiset, and re-hashing the
-    # 64-bit gram hash per seed (hash-of-hash) is an equally valid
-    # minhash family — 3x fewer hash evaluations and no second scan
-    # of the corpus. One map-side-combinable aggregation; the shuffle
-    # carries (rid, num_hashes longs) regardless of doc size.
-    per_doc = gset.groupBy("rid").agg(
+    # one map-side-combinable aggregation per document: the gram-hash
+    # set and the signature. The min over the multiset equals the min
+    # over the set, and re-hashing the 64-bit gram hash per seed
+    # (hash-of-hash) is an equally valid minhash family. Consumed by
+    # the blocking and by both sides of the verify -> persist (handle
+    # surfaced via _persisted_frames, see module docstring); the
+    # candidate base's eager pin materializes it.
+    per_doc = gram_rows.groupBy("rid").agg(
+        F.collect_set("gh").alias("_gs"),
         *[
             F.min(F.xxhash64("gh", F.lit(s))).alias(f"_h{s}")
             for s in range(num_hashes)
-        ]
-    )
-    bands = []
-    for b in range(num_bands):
-        cols = [F.col(f"_h{i}") for i in range(b * band_size, (b + 1) * band_size)]
-        bands.append(F.xxhash64(F.lit(b), *cols))
+        ],
+    ).persist()
     blocked = per_doc.select(
         "rid", F.explode(F.array(*bands)).alias("block_key")
     )
@@ -193,70 +193,26 @@ def minhash_lsh_duplicates(
         payload_cols=(),
         max_block_size=max_block_size,
     )
-    if jaccard_threshold <= 0:
-        raise ValueError("jaccard_threshold must be > 0 (pairs with an "
-                         "empty gram intersection are pruned, not scored)")
-    # attach per-doc distinct-gram counts (narrow equi-joins) and prune
-    # with the containment upper bound — lossless: J can never exceed
-    # min/max, so no pair at or above the threshold is dropped (the
-    # 1e-9 slack absorbs double rounding at the boundary)
-    cand = (
-        pairs.join(sizes.withColumnRenamed("rid", "id_a"), "id_a")
-        .withColumnRenamed("ng", "ng_a")
-        .join(sizes.withColumnRenamed("rid", "id_b"), "id_b")
-        .withColumnRenamed("ng", "ng_b")
-    )
-    bound = F.least("ng_a", "ng_b").cast("double") / F.greatest(
-        "ng_a", "ng_b"
-    ).cast("double")
-    cand = cand.where(bound >= F.lit(jaccard_threshold) - F.lit(1e-9))
-    # |A∩B| without materializing sets: candidate pairs x grams of the
-    # left doc, semi-matched against grams of the right doc, counted
-    # per pair. Two equi-joins + one combinable count over fixed-width
-    # rows — the shape that survives a 100x scale-up. The count is the
-    # plan SPINE (single linear lineage — a left-join back onto the
-    # candidate frame would duplicate the whole self-join subtree in
-    # the logical plan and blow up driver-side planning); pairs that
-    # produce no intersection rows have jaccard 0 < threshold and are
-    # correctly absent.
-    # shuffle_hash: the candidate-side stream is many times larger than
-    # a gram partition, and sort-merge would SORT the exploded
-    # (pair, gram) stream twice — measured 9x slower than hash joins
-    # here. The build side is one gram-table partition (bounded by
-    # shuffle parallelism), which is exactly what scales: at 10^12
-    # turns you raise partitions, never the per-partition build set.
-    ga = gset.select(F.col("rid").alias("id_a"), "gh").hint("shuffle_hash")
-    gb = gset.select(F.col("rid").alias("id_b"), "gh").hint("shuffle_hash")
-    # round-6: pin the first counting join's parallelism. Its INPUTS are
-    # small (pairs + gram rows) so AQE coalesces the exchange by input
-    # bytes, but its OUTPUT is the pairs x grams-of-A explosion (~200x)
-    # — measured: 10 post-coalesce tasks owned a 50M-row join on a
-    # 32-core box. The explicit keyed repartition satisfies the join's
-    # distribution requirement (so it REPLACES the implicit exchange,
-    # adding none) while its fixed partition count is exempt from AQE
-    # coalescing; 2x defaultParallelism is cluster-proportional, not a
-    # local constant.
-    n_spine = cand.sparkSession.sparkContext.defaultParallelism * 2
-    # the spine carries ONE precomputed size column (ng_a + ng_b)
-    # instead of both: 8 fewer bytes per exploded row and a narrower
-    # partial-aggregation key; union = ngs - inter is the same integer
+    sets = per_doc.select("rid", "_gs")
+    na, nb = F.size("_gs_a"), F.size("_gs_b")
+    inter = F.size(F.array_intersect("_gs_a", "_gs_b"))
+    # the containment bound is lossless: J can never exceed min/max, and
+    # both are correctly rounded quotients of integers, so no pair the
+    # jaccard filter keeps is dropped (the 1e-9 slack is a margin only)
+    bound = F.least(na, nb).cast("double") / F.greatest(na, nb).cast("double")
     out = (
-        cand.select(
-            "id_a", "id_b", (F.col("ng_a") + F.col("ng_b")).alias("_ngs")
-        )
-        .repartition(n_spine, "id_a")
-        .join(ga, "id_a")
-        .join(gb, ["id_b", "gh"])
-        .groupBy("id_a", "id_b", "_ngs")
-        .agg(F.count(F.lit(1)).alias("_i"))
-        .withColumn("_u", F.col("_ngs") - F.col("_i"))
+        pairs.join(sets.toDF("id_a", "_gs_a"), "id_a")
+        .join(sets.toDF("id_b", "_gs_b"), "id_b")
+        .where(bound >= F.lit(jaccard_threshold) - F.lit(1e-9))
+        .withColumn("_i", inter)
         .withColumn(
-            "jaccard", F.col("_i").cast("double") / F.col("_u").cast("double")
+            "jaccard",
+            F.col("_i").cast("double") / (na + nb - F.col("_i")).cast("double"),
         )
         .where(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    out._persisted_frames = [gset] + getattr(pairs, "_persisted_frames", [])
+    out._persisted_frames = [per_doc] + getattr(pairs, "_persisted_frames", [])
     return out
 
 
@@ -282,7 +238,7 @@ def dedup_near(
     ``method="minhash"`` (default) edges on verified q-gram Jaccard >=
     ``jaccard_threshold``; ``method="simhash"`` edges on fingerprint
     Hamming distance <= ``max_hamming`` via the bit-band route (cheaper
-    verification — one popcount per candidate, no gram re-join — at a
+    verification — one popcount per candidate, no gram sets — at a
     coarser notion of nearness; ``num_bands``/``gram_hash`` pass
     through, recall guarantee per ``simhash_near_duplicates``);
     ``method="embedding"`` edges on exact cosine >= ``cosine_threshold``
@@ -470,9 +426,9 @@ def simhash_near_duplicates(
     an uninformative slice (e.g. all-zero fingerprints from boilerplate)
     and its loss is the standard LSH trade.
 
-    Complements ``minhash_lsh_duplicates``: SimHash verification needs
-    no gram re-join at all (one popcount per candidate), so at corpus
-    scale the verify stage is pure fixed-width column math.
+    Complements ``minhash_lsh_duplicates``: SimHash verification is one
+    popcount per candidate over an 8-byte fingerprint, so the verify
+    stage is pure fixed-width column math.
 
     NULL policy: inherited from ``with_simhash`` — NULL docs sketch to
     nothing and pair with nothing."""

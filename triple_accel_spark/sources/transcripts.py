@@ -114,17 +114,6 @@ def generate_transcripts(
     return transcripts, truth
 
 
-def write_corpus(spark, out_dir: str, **kwargs) -> tuple[str, str]:
-    """Generate and persist a corpus; returns (transcripts_path,
-    truth_path)."""
-    tdf, pdf = generate_transcripts(**kwargs)
-    tpath = f"{out_dir}/transcripts.parquet"
-    ppath = f"{out_dir}/truth_pairs.parquet"
-    spark.createDataFrame(tdf).repartition(8).write.mode("overwrite").parquet(tpath)
-    spark.createDataFrame(pdf).write.mode("overwrite").parquet(ppath)
-    return tpath, ppath
-
-
 def load_transcripts(
     spark,
     source: str,
