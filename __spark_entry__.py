@@ -1024,7 +1024,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             cfg=LinkConfig(
                 blocking="prefix", prefix_len=ER_PREFIX,
                 sim_threshold=ER_TAU, max_block_pairs=None,
-                best_per="right",
             ),
         )
         return res.best.select(

@@ -77,7 +77,6 @@ def main() -> None:
 
     cfg = LinkConfig(
         sim_threshold=args.sim_threshold, blocking=args.blocking,
-        best_per="right",
     )
     t0 = time.time()
     if args.mode == "assign":

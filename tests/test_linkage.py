@@ -129,7 +129,6 @@ def test_link_records_assignment(spark):
         left, right,
         cfg=LinkConfig(
             blocking="prefix", prefix_len=4, sim_threshold=0.8,
-            best_per="right",
         ),
     )
     best = {r.id_r: r.id_l for r in res.best.collect()}
@@ -156,7 +155,6 @@ def test_link_records_best_deterministic_tiebreak(spark):
             left, right,
             cfg=LinkConfig(
                 blocking="prefix", prefix_len=8, sim_threshold=0.5,
-                best_per="right",
             ),
         )
         rows = res.best.collect()

@@ -369,6 +369,21 @@ def hamming_search(
     return _udf(needle, haystack)
 
 
+def pair_budget(threshold: float, len_a: Column, len_b: Column) -> Column:
+    """Per-pair distance budget ``ceil((1-t) * greatest(len_a, len_b,
+    1))`` over two length Columns (see ``scoring.relative_k_col``)."""
+    maxlen = F.greatest(len_a, len_b, F.lit(1))
+    return F.ceil(F.lit(1.0 - threshold) * maxlen.cast("double")).cast("int")
+
+
+def max_length_gap(k: Column, costs: EditCosts) -> Column:
+    """Largest length difference a per-pair budget Column ``k`` admits:
+    every unit of length gap costs at least one gap."""
+    return F.floor(
+        F.greatest(k - F.lit(costs.start_gap_cost), F.lit(0)) / F.lit(costs.gap_cost)
+    )
+
+
 def length_prefilter(
     a, b, k: int | Column, costs: EditCosts = LEVENSHTEIN_COSTS
 ) -> Column:
@@ -380,11 +395,7 @@ def length_prefilter(
     ``k`` may be a Column for per-pair cutoffs (see ``edit_distance``);
     the bound stays whole-stage-codegen either way."""
     if isinstance(k, Column):
-        unit_k = F.floor(
-            F.greatest(k - F.lit(costs.start_gap_cost), F.lit(0))
-            / F.lit(costs.gap_cost)
-        )
-        return F.abs(F.length(a) - F.length(b)) <= unit_k
+        return F.abs(F.length(a) - F.length(b)) <= max_length_gap(k, costs)
     unit_k = max(k - costs.start_gap_cost, 0) // costs.gap_cost
     return F.abs(F.length(a) - F.length(b)) <= F.lit(unit_k)
 
@@ -444,13 +455,13 @@ def jw_length_bound(a, b, threshold: float) -> Column:
     ``jw <= 0.8 + 0.2 * min(la,lb)/max(la,lb)`` — a pair can only reach
     ``threshold`` when the length ratio is >= 5*threshold - 4 (binding
     only for thresholds above 0.8). A 1e-9 slack keeps rounding-
-    boundary pairs (ADVICE r4: prefilters round toward keeping).
+    boundary pairs (prefilters round toward keeping).
 
-    Lengths are OCTET lengths (round-6, ADVICE r5): the kernel scores
-    UTF-8 BYTES, so the bound must be computed in the same units —
-    ``F.length`` counts characters, and on multibyte text the char
-    ratio can sit far below the byte ratio, wrongly pruning a pair
-    whose byte-JW meets the threshold."""
+    Lengths are OCTET lengths: the kernel scores UTF-8 BYTES, so the
+    bound must be computed in the same units — ``F.length`` counts
+    characters, and on multibyte text the char ratio can sit far below
+    the byte ratio, wrongly pruning a pair whose byte-JW meets the
+    threshold."""
     lo = F.least(F.octet_length(a), F.octet_length(b)).cast("double")
     hi = F.greatest(F.octet_length(a), F.octet_length(b), F.lit(1)).cast("double")
     return lo / hi >= F.lit(5.0 * threshold - 4.0 - 1e-9)

@@ -6,7 +6,7 @@
                 pairs and two-table links (re-exported by ``linkage``).
 ``scoring``     k-cutoff prefilter + vectorized pair scoring.
 ``clustering``  connected components (large-star/small-star) with
-                checkpoint/resume and per-iteration metrics.
+                checkpoint/resume.
 ``dedup``       exact / MinHash-LSH / SimHash / n-gram-Jaccard /
                 embedding near-duplicate detection.
 ``similarity``  brute-force and LSH-bucketed cosine top-k ANN.

@@ -21,10 +21,9 @@ Checkpoint/resume: every checkpointed iteration writes the current edge
 set to ``{checkpoint_dir}/iter_NNNN`` plus a ``manifest.json``; a
 restarted job resumes from the highest committed iteration (north-rule
 requirement: resumable from checkpoint), and one whose last entry is
-converged only relabels it. Parquet round-trips also cut lineage so
-plans don't grow across iterations. Per-iteration metric rows (edge
-counts, checksum, converged flag) append to
-``{checkpoint_dir}/metrics``.
+converged only relabels it. Each manifest entry records the
+iteration's edge count, checksum and converged flag. Parquet round-trips
+also cut lineage so plans don't grow across iterations.
 """
 
 from __future__ import annotations
@@ -35,20 +34,20 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from triple_accel_spark.session import stage
+
 
 def _neighborhoods(edges: DataFrame) -> DataFrame:
     """Both directions ``(u, v)`` of every edge, each row carrying its
     node ``u``'s neighborhood minimum ``m`` and degree ``deg``.
 
-    Plan shape (round-6 rewrite): the per-node minimum is a window over
-    the SAME partitioning the old groupBy+join pair needed three
-    exchanges for (guide §2.4 — operations keyed alike share one
-    exchange), and both edge directions come from one explode instead
-    of a union that scanned the edge RDD twice. One shuffle; the degree
-    rides on the same window. This is the first half of ``_large_star``
-    and, on a checkpointed edge set, the input of the convergence test
-    (``_checkpoint_stats``), so a checkpoint pays that shuffle once for
-    both."""
+    Plan shape: the per-node minimum is a window over the node's
+    partitioning (operations keyed alike share one exchange), and both
+    edge directions come from one explode, so the edge RDD is scanned
+    once. One shuffle; the degree rides on the same window. This is the
+    first half of ``_large_star`` and, on a checkpointed edge set, the
+    input of the convergence test (``_checkpoint_stats``), so a
+    checkpoint pays that shuffle once for both."""
     w = Window.partitionBy("u")
     bid = edges.select(
         F.explode(
@@ -181,56 +180,53 @@ def connected_components(
     start_iter = 0
     converged = False
     manifest = {"iterations": []}
-    if checkpoint_dir:
-        man = _read_manifest(checkpoint_dir)
-        if man and man.get("iterations"):
-            manifest = man
-            last = man["iterations"][-1]
-            e = spark.read.parquet(last["path"])
-            start_iter = last["iteration"] + 1
-            converged = last["converged"]
-
-    checkpoint_interval = max(1, checkpoint_interval)
-    nbhd = _neighborhoods(e)
-    for it in range(start_iter, max_iter):
-        if converged:
-            break
-        e = _small_star(_large_star(nbhd))
-        at_cp = (
-            (it - start_iter + 1) % checkpoint_interval == 0
-            or it == max_iter - 1
-        )
-        if checkpoint_dir and at_cp:
-            path = os.path.join(checkpoint_dir, f"iter_{it:04d}")
-            e.write.mode("overwrite").parquet(path)
-            e = spark.read.parquet(path)
-        else:
-            # lazy barrier: plan becomes a LogicalRDD (constant size);
-            # the RDD materializes with the next action, so deferred
-            # rounds cost no job of their own
-            e = e.localCheckpoint(eager=False)
-        nbhd = _neighborhoods(e)
-        if not at_cp:
-            continue
-        # the test reads the next round's neighborhoods: keep them, so
-        # the round does not shuffle the edge set a second time
-        nbhd = nbhd.localCheckpoint(eager=False)
-        n_edges, checksum, converged = _checkpoint_stats(nbhd)
+    with stage(spark, "clustering"):
         if checkpoint_dir:
-            manifest["iterations"].append(
-                {
-                    "iteration": it,
-                    "path": path,
-                    "n_edges": n_edges,
-                    "checksum": checksum,
-                    "converged": converged,
-                }
+            man = _read_manifest(checkpoint_dir)
+            if man and man.get("iterations"):
+                manifest = man
+                last = man["iterations"][-1]
+                e = spark.read.parquet(last["path"])
+                start_iter = last["iteration"] + 1
+                converged = last["converged"]
+
+        checkpoint_interval = max(1, checkpoint_interval)
+        nbhd = _neighborhoods(e)
+        for it in range(start_iter, max_iter):
+            if converged:
+                break
+            e = _small_star(_large_star(nbhd))
+            at_cp = (
+                (it - start_iter + 1) % checkpoint_interval == 0
+                or it == max_iter - 1
             )
-            _write_manifest(checkpoint_dir, manifest)
-            spark.createDataFrame(
-                [(it, n_edges, checksum, converged)],
-                "iteration int, n_edges long, checksum long, converged boolean",
-            ).write.mode("append").parquet(os.path.join(checkpoint_dir, "metrics"))
+            if checkpoint_dir and at_cp:
+                path = os.path.join(checkpoint_dir, f"iter_{it:04d}")
+                e.write.mode("overwrite").parquet(path)
+                e = spark.read.parquet(path)
+            else:
+                # lazy barrier: plan becomes a LogicalRDD (constant size);
+                # the RDD materializes with the next action, so deferred
+                # rounds cost no job of their own
+                e = e.localCheckpoint(eager=False)
+            nbhd = _neighborhoods(e)
+            if not at_cp:
+                continue
+            # the test reads the next round's neighborhoods: keep them, so
+            # the round does not shuffle the edge set a second time
+            nbhd = nbhd.localCheckpoint(eager=False)
+            n_edges, checksum, converged = _checkpoint_stats(nbhd)
+            if checkpoint_dir:
+                manifest["iterations"].append(
+                    {
+                        "iteration": it,
+                        "path": path,
+                        "n_edges": n_edges,
+                        "checksum": checksum,
+                        "converged": converged,
+                    }
+                )
+                _write_manifest(checkpoint_dir, manifest)
 
     # after convergence every edge is (node, component-min)
     labels = e.select(F.col("u").alias("id"), F.col("v").alias("cluster_id"))
@@ -255,7 +251,8 @@ def local_connected_components(edges: DataFrame, src: str = "id_a", dst: str = "
     is strictly a small-job latency optimization, never a scalability
     crutch (the collect is bounded by the caller's threshold)."""
     spark = edges.sparkSession
-    rows = edges.select(src, dst).collect()
+    with stage(spark, "clustering"):
+        rows = edges.select(src, dst).collect()
     parent: dict = {}
 
     def find(x):

@@ -39,6 +39,7 @@ from triple_accel_spark.operators.text import (
     token_count,
     with_lang_id,
 )
+from triple_accel_spark.session import stage
 
 
 @dataclass
@@ -126,12 +127,13 @@ def prepare_training_corpus(
         id_col, text_col, "n_tokens", "quality_score", "lang_pred",
         p_valid.alias("_pv"), p_quality.alias("_pq"), p_lang.alias("_pl"),
     ).persist()
-    counts = flagged.agg(
-        F.count(F.lit(1)).alias("n_input"),
-        F.count(F.when(F.col("_pv"), 1)).alias("n_valid"),
-        F.count(F.when(F.col("_pq"), 1)).alias("n_quality"),
-        F.count(F.when(F.col("_pl"), 1)).alias("n_lang"),
-    ).collect()[0]
+    with stage(docs.sparkSession, "text"):
+        counts = flagged.agg(
+            F.count(F.lit(1)).alias("n_input"),
+            F.count(F.when(F.col("_pv"), 1)).alias("n_valid"),
+            F.count(F.when(F.col("_pq"), 1)).alias("n_quality"),
+            F.count(F.when(F.col("_pl"), 1)).alias("n_lang"),
+        ).collect()[0]
     metrics.update(counts.asDict())
 
     kept = flagged.where(F.col("_pl")).drop("_pv", "_pq", "_pl")
@@ -151,10 +153,11 @@ def prepare_training_corpus(
     # all rows, n_near = flagged rows) and backs the returned `kept`,
     # so the survivor join also runs exactly once
     flagged_near = exact.join(survivors, id_col, "left").persist()
-    counts = flagged_near.agg(
-        F.count(F.lit(1)).alias("n_exact"),
-        F.count(F.when(F.col("_nd"), 1)).alias("n_near"),
-    ).collect()[0]
+    with stage(docs.sparkSession, "dedup"):
+        counts = flagged_near.agg(
+            F.count(F.lit(1)).alias("n_exact"),
+            F.count(F.when(F.col("_nd"), 1)).alias("n_near"),
+        ).collect()[0]
     metrics.update(counts.asDict())
     # the persisted frames stay cached: the returned frame derives from
     # them, so the caller consumes `kept` then releases via

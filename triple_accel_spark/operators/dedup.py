@@ -44,6 +44,7 @@ from triple_accel_spark.operators.blocking import (
     rebalance_small_scan,
 )
 from triple_accel_spark.operators.pairs import candidate_pairs
+from triple_accel_spark.session import stage
 
 # near-dup edge graphs at or below this edge count cluster via the
 # bounded driver union-find: the star contraction's ~10 stages/round
@@ -273,13 +274,15 @@ def dedup_near(
     # CC's first interval action would otherwise inline the whole
     # LSH-verification chain ~4^rounds times — measured 83s vs 8.4s on
     # a 256-edge graph at sf0.1. One job materializes the (tiny) edge
-    # list once; CC then iterates over the RDD barrier.
-    e = edges.select("id_a", "id_b").localCheckpoint(eager=True)
+    # list once; CC then iterates over the RDD barrier. Counting the
+    # checkpointed edge list is one cheap job that routes small graphs
+    # to the local union-find (see CC_LOCAL_THRESHOLD).
+    with stage(df.sparkSession, "dedup"):
+        e = edges.select("id_a", "id_b").localCheckpoint(eager=True)
+        n_edges = e.count()
     for fr in getattr(edges, "_persisted_frames", []):
         fr.unpersist()
-    # counting the checkpointed edge list is one cheap job that routes
-    # small graphs to the local union-find (see CC_LOCAL_THRESHOLD)
-    if e.count() <= CC_LOCAL_THRESHOLD:
+    if n_edges <= CC_LOCAL_THRESHOLD:
         from triple_accel_spark.operators.clustering import (
             local_connected_components,
         )

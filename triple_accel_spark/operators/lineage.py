@@ -17,9 +17,9 @@ mechanisms:
   are observed on the census rows as the write streams them
   (``pyspark.sql.Observation``), not read back from the sink.
 
-The connected-components loop commits its own per-iteration rows
-(edge counts, checksum, convergence) — see ``clustering.py``; this
-module covers the scan/block/pair/score stages.
+The connected-components loop records its own per-iteration facts
+(edge counts, checksum, convergence) in its checkpoint manifest — see
+``clustering.py``; this module covers the scan/block/pair/score stages.
 """
 
 from __future__ import annotations
@@ -29,6 +29,8 @@ import time
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from triple_accel_spark import session
 
 
 def partition_stats(
@@ -80,12 +82,13 @@ def commit_stage_metrics(
         metrics_dir, f"run_id={run_id}", f"stage={stage}", f"ordinal={ordinal}"
     )
     totals = Observation()
-    stats.observe(
-        totals,
-        F.count(F.lit(1)).alias("n_partitions"),
-        F.sum("n_rows").alias("n_rows"),
-        F.sum("n_bytes").alias("n_bytes"),
-    ).write.mode("overwrite").parquet(path)
+    with session.stage(df.sparkSession, "lineage"):
+        stats.observe(
+            totals,
+            F.count(F.lit(1)).alias("n_partitions"),
+            F.sum("n_rows").alias("n_rows"),
+            F.sum("n_bytes").alias("n_bytes"),
+        ).write.mode("overwrite").parquet(path)
     row = totals.get
     return {
         "stage": stage,

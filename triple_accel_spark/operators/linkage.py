@@ -17,7 +17,7 @@ pair volume ``|L_b|·|R_b|`` and an optional early length prune.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -29,6 +29,7 @@ from triple_accel_spark.operators.blocking import (
 )
 from triple_accel_spark.operators.pairs import candidate_links
 from triple_accel_spark.operators.scoring import relative_k_col, score_pairs
+from triple_accel_spark.session import stage
 
 
 @dataclass
@@ -51,17 +52,13 @@ class LinkConfig:
     max_block_pairs: int | None = 1_000_000
     salt_threshold: int = 4096
     salt_shards: int = 8
-    # "right": best left partner per right record (match incoming
-    # records against a reference corpus); "left": the converse;
-    # None skips the assignment stage
-    best_per: str | None = "right"
 
 
 @dataclass
 class LinkResult:
     pairs_scored: DataFrame
     matches: DataFrame
-    best: DataFrame | None
+    best: DataFrame
     metrics: dict
 
     def unpersist(self, blocking: bool = True) -> None:
@@ -87,11 +84,11 @@ def link_records(
     Inputs carry ``(id_col, text_col)``; blocking keys are generated
     identically on both sides (two tables only collide when their keys
     agree, so the blocking function must be shared). Returns all scored
-    candidate pairs, the pairs at/above ``sim_threshold``, and — when
-    ``cfg.best_per`` is set — the single best partner per record of
-    that side (deterministic: max ``sim``, then min ``dist``, then min
-    partner id), the standard one-to-many assignment for matching
-    incoming records against a reference corpus.
+    candidate pairs, the pairs at/above ``sim_threshold``, and the
+    single best left partner per right record (deterministic: max
+    ``sim``, then min ``dist``, then min left id), the standard
+    one-to-many assignment for matching incoming records against a
+    reference corpus.
     """
     cfg = cfg or LinkConfig()
     metrics: dict = {}
@@ -139,10 +136,11 @@ def link_records(
             cfg.sim_threshold if cfg.scorer == "jaro_winkler" else None
         ),
     ).cache()
-    row = scored.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(F.when(F.col("sim") >= cfg.sim_threshold, 1)).alias("m"),
-    ).collect()[0]
+    with stage(scored.sparkSession, "scoring"):
+        row = scored.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count(F.when(F.col("sim") >= cfg.sim_threshold, 1)).alias("m"),
+        ).collect()[0]
     metrics["n_pairs_scored"] = row["n"]
     metrics["n_matches"] = row["m"]
     for fr in getattr(pairs, "_persisted_frames", []):
@@ -150,22 +148,17 @@ def link_records(
 
     matches = scored.where(F.col("sim") >= cfg.sim_threshold)
 
-    best = None
-    if cfg.best_per:
-        keep, other = (
-            ("id_r", "id_l") if cfg.best_per == "right" else ("id_l", "id_r")
-        )
-        # groups are candidate lists per record — bounded by the block
-        # cap, so the per-group sort is small; the shuffle is one
-        # hash-partition on the kept id (linear in match count)
-        w = Window.partitionBy(keep).orderBy(
-            F.col("sim").desc(), F.col("dist").asc(), F.col(other).asc()
-        )
-        best = (
-            matches.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+    # groups are candidate lists per record — bounded by the block
+    # cap, so the per-group sort is small; the shuffle is one
+    # hash-partition on the right id (linear in match count)
+    w = Window.partitionBy("id_r").orderBy(
+        F.col("sim").desc(), F.col("dist").asc(), F.col("id_l").asc()
+    )
+    best = (
+        matches.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .drop("_rn")
+    )
     return LinkResult(scored, matches, best, metrics)
 
 
@@ -198,7 +191,7 @@ def assign_to_clusters(
     res = link_records(
         clustered.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")),
         new_records.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")),
-        cfg=replace(cfg or LinkConfig(), best_per="right"),
+        cfg=cfg,
     )
     labels = clustered.select(
         F.col(id_col).alias("id_l"), F.col(cluster_col).alias("_cl")
@@ -220,7 +213,8 @@ def assign_to_clusters(
     # result's own persist handle is exposed via _persisted_frames,
     # matching the candidate_pairs/candidate_links convention.
     out = out.persist()
-    out.count()
+    with stage(out.sparkSession, "linkage"):
+        out.count()
     res.unpersist()
     out._persisted_frames = [out]
     return out

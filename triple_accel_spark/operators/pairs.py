@@ -43,7 +43,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from triple_accel_spark.functions import max_length_gap, pair_budget
 from triple_accel_spark.kernels.costs import EditCosts, LEVENSHTEIN_COSTS
+from triple_accel_spark.session import stage
 
 
 def _persisted_base(
@@ -62,7 +64,8 @@ def _persisted_base(
     base = blocked.select(
         F.col(id_col).alias("rid"), F.col(block_col).alias("bk"), *cols
     ).persist()
-    base.count()
+    with stage(blocked.sparkSession, "pairs"):
+        base.count()
     return base
 
 
@@ -122,15 +125,9 @@ def _block_join(
         # scoring's length_prefilter(relative_k_col(t)) on the
         # precomputed ints: prune BEFORE the dedupe and payload joins
         threshold, costs = prune
-        k_pair = F.ceil(
-            F.lit(1.0 - threshold)
-            * F.greatest(F.col("_len_l"), F.col("_len_r"), F.lit(1)).cast("double")
-        ).cast("int")
-        unit_k = F.floor(
-            F.greatest(k_pair - F.lit(costs.start_gap_cost), F.lit(0))
-            / F.lit(costs.gap_cost)
-        )
-        joined = joined.where(F.abs(F.col("_len_l") - F.col("_len_r")) <= unit_k)
+        len_l, len_r = F.col("_len_l"), F.col("_len_r")
+        gap = max_length_gap(pair_budget(threshold, len_l, len_r), costs)
+        joined = joined.where(F.abs(len_l - len_r) <= gap)
     pairs = joined.select(F.col("rid_l").alias(id_l), F.col("rid_r").alias(id_r))
 
     # A pair found by several bands must be scored once. The keyed

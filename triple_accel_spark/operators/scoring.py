@@ -18,6 +18,7 @@ from triple_accel_spark.functions import (
     jaro_winkler,
     jw_length_bound,
     length_prefilter,
+    pair_budget,
 )
 from triple_accel_spark.kernels.costs import EditCosts, LEVENSHTEIN_COSTS
 
@@ -87,8 +88,7 @@ def relative_k_col(threshold: float, text_a, text_b) -> Column:
     bound safe against double rounding of ``(1-t)*maxlen`` at integer
     boundaries. A long corpus outlier never widens the band of
     unrelated short pairs."""
-    denom = F.greatest(F.length(text_a), F.length(text_b), F.lit(1))
-    return F.ceil(F.lit(1.0 - threshold) * denom.cast("double")).cast("int")
+    return pair_budget(threshold, F.length(text_a), F.length(text_b))
 
 
 def pairwise_f1(

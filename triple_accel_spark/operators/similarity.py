@@ -71,10 +71,9 @@ def topk_per_key(
     identical to the single-window rank, including the deterministic
     ``(order desc, tiebreak asc)`` tie-break."""
     salt = F.pmod(F.xxhash64(F.col(tiebreak_col)), F.lit(salt_buckets))
-    # NOTE(round-6): an explicit repartition pin of this exchange was
-    # tried and reverted — A/B showed the fixed-count exchange costing
-    # more than AQE's byte-based coalescing here (q4b 3.5 -> 4.1s,
-    # q4c 5.6-7.3 -> 7.7s).
+    # no repartition pin on this exchange: in an A/B a fixed-count
+    # exchange cost more than AQE's byte-based coalescing here (q4b
+    # 3.5 -> 4.1s, q4c 5.6-7.3 -> 7.7s).
     w1 = Window.partitionBy(F.col(key_col), salt).orderBy(
         F.desc(order_col), F.asc(tiebreak_col)
     )
@@ -118,9 +117,9 @@ def _to_matrix(v: pd.Series, dim: int | None = None) -> tuple[np.ndarray, np.nda
     whole-corpus Arrow batch (``np.array(list(v))`` on mixed lengths
     builds an object array and the einsum throws).
 
-    Round-6: the common all-valid batch takes ONE ``np.vstack`` over
-    the Arrow views (C-level copy) — the per-row Python assignment loop
-    ran per batch element and dominated the cosine stage's profile
+    The common all-valid batch takes ONE ``np.vstack`` over the Arrow
+    views (C-level copy) — a per-row Python assignment loop runs per
+    batch element and dominates the cosine stage's profile
     (millions of pair rows per corpus pass, each carrying two vectors);
     ``vstack`` raises ``ValueError`` on a ragged row or a NULL among
     vectors, and stacks an all-NULL batch into an object matrix, which
@@ -653,10 +652,10 @@ def lsh_all_pairs_topk(
     on the testdata embeddings."""
     from triple_accel_spark.operators.pairs import candidate_pairs
 
-    # NOTE(round-6): rebalance_small_scan was tried here and reverted —
-    # the eager dimension probe plus the added exchange below the
-    # candidate persist cost more than the one-task bucket stage saved
-    # (A/B: 3.59s vs 5.1-5.7s on the q4b bench line).
+    # no rebalance_small_scan here: in an A/B its eager dimension probe
+    # plus the added exchange below the candidate persist cost more
+    # than the one-task bucket stage saved (3.59s vs 5.1-5.7s on the
+    # q4b bench line).
     base = corpus.where(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("rid"), F.col(vec_col).alias("vec")
     )
@@ -679,13 +678,13 @@ def lsh_all_pairs_topk(
         max_block_size=max_block_size,
     )
     scored = pairs.withColumn("cosine", cosine_arrow("vec_a", "vec_b"))
-    # round-6: expand each unordered pair into both directions with ONE
-    # explode over the already-computed cosine attribute. The previous
-    # two-branch union referenced `scored` twice, duplicating the whole
-    # candidate-join + cosine-UDF subtree in the plan — the distinct,
-    # payload attach and Arrow cosine each executed twice per corpus
+    # expand each unordered pair into both directions with ONE explode
+    # over the already-computed cosine attribute. A two-branch union
+    # would reference `scored` twice and duplicate the whole
+    # candidate-join + cosine-UDF subtree in the plan: the distinct,
+    # payload attach and Arrow cosine would each run twice per corpus
     # pass (the UDF is nondeterministic, so Catalyst cannot collapse
-    # the copies). Row set is identical.
+    # the copies).
     both = scored.select(
         F.explode(
             F.array(

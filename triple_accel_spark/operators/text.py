@@ -43,11 +43,10 @@ def token_count(text_col, mode: str = "regex") -> Column:
     ``regex`` counts word/number/punctuation units (BPE-ish pre-token
     boundary approximation).
 
-    Round-6: counts come from ``regexp_count`` instead of materializing
-    every token into an array just to take its size — one regex scan,
-    no per-token allocation, same counts (``split`` on trimmed text
-    yields separators+1 pieces; NULL in -> NULL out either way under
-    ANSI)."""
+    Counts come from ``regexp_count``: one regex scan, no per-token
+    allocation, and the same counts as taking the size of the split
+    token array (``split`` on trimmed text yields separators+1 pieces;
+    NULL in -> NULL out either way under ANSI)."""
     c = F.col(text_col) if isinstance(text_col, str) else text_col
     if mode == "whitespace":
         trimmed = F.trim(c)
@@ -71,13 +70,13 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Append quality-signal columns + a composite ``quality_score`` in
     [0, 1] (heuristic weights; each signal is independently usable).
 
-    Round-6: the four character-class counts come from ``translate``
-    (codegen lookup-table char deletion) instead of four full
-    ``regexp_replace`` passes that built a stripped copy of every
-    document per class — measured 52 CPU-s -> single-digit CPU-s on the
-    5k-doc bench corpus, counts identical (``_SPACE_CHARS`` is exactly
-    the Java regex ``\\s`` class, and alpha/digit/space/other partition
-    the alphabet, so ``punct`` is the remainder)."""
+    The four character-class counts come from ``translate`` (codegen
+    lookup-table char deletion), not from a ``regexp_replace`` pass per
+    class that builds a stripped copy of every document (measured 52
+    CPU-s against single-digit CPU-s on a 5k-doc corpus, counts
+    identical: ``_SPACE_CHARS`` is exactly the Java regex ``\\s`` class,
+    and alpha/digit/space/other partition the alphabet, so ``punct`` is
+    the remainder)."""
     c = F.col(text_col)
     n = F.length(c)
     alpha = n - F.length(F.translate(c, _ALPHA_CHARS, ""))
@@ -153,12 +152,12 @@ def with_lang_id(
             F.split(F.lower(F.col("_lt")), r"[^a-zà-ÿ]+")
         ).alias("_tok"),
     )
-    # round-6: one hash-set membership test (isin over the union list
-    # compiles to InSet above 10 items) drops every non-stopword token
-    # BEFORE the per-language conditional counts, which previously ran
-    # four 10-way string-compare chains over every token. Docs with no
-    # hits lose their counts row; the left join + coalesce(0) below
-    # already maps that to 'und', so predictions are identical.
+    # one hash-set membership test (isin over the union list compiles
+    # to InSet above 10 items) drops every non-stopword token BEFORE
+    # the per-language conditional counts, so their 10-way
+    # string-compare chains see stopwords only. Docs with no hits lose
+    # their counts row; the left join + coalesce(0) below maps that to
+    # 'und'.
     all_stopwords = sorted({w for ws in STOPWORDS.values() for w in ws})
     toks = toks.where(F.col("_tok").isin(all_stopwords))
     counts = toks.groupBy("_lid").agg(

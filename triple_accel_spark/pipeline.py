@@ -28,6 +28,7 @@ from triple_accel_spark.operators.clustering import (
 )
 from triple_accel_spark.operators.pairs import candidate_pairs
 from triple_accel_spark.operators.scoring import relative_k_col, score_pairs
+from triple_accel_spark.session import stage
 
 
 @dataclass
@@ -95,29 +96,26 @@ def resolve_entities(transcripts: DataFrame, cfg: ResolveConfig | None = None) -
     a driver-side metrics dict (stage row counts)."""
     cfg = cfg or ResolveConfig()
     metrics: dict = {}
-    import time as _time
+    spark = transcripts.sparkSession
 
-    _t0 = _time.time()
-
-    def commit(df, stage, **kw):
+    def commit(df, name, **kw):
         if cfg.metrics_dir:
             from triple_accel_spark.operators.lineage import commit_stage_metrics
 
-            metrics[f"lineage_{stage}"] = commit_stage_metrics(
-                df, stage, cfg.metrics_dir, run_id=cfg.run_id, **kw
+            metrics[f"lineage_{name}"] = commit_stage_metrics(
+                df, name, cfg.metrics_dir, run_id=cfg.run_id, **kw
             )
 
     docs = assemble_documents(transcripts).cache()
+    # the docs cache is materialized HERE, by the count that also gives
+    # the n_docs metric: blocking, the candidate machinery, the payload
+    # re-attach and the docs census all fan out from `docs`, and with a
+    # cold cache concurrent branches each re-run the assemble
+    # aggregation (Spark's block cache does not serialize concurrent
+    # cold computes)
+    with stage(spark, "assemble"):
+        metrics["n_docs"] = docs.count()
     commit(docs, "docs", size_col="doc", id_col="conv_id")
-
-    # Round-6: the docs cache is materialized HERE (one count, which
-    # also provides the n_docs metric) — blocking, the candidate
-    # machinery and the payload re-attach all fan out from `docs`, and
-    # with a cold cache those concurrent branches each re-ran the
-    # assemble aggregation (profiled: 4 duplicate evaluations inside
-    # one pipeline run; Spark's block cache does not serialize
-    # concurrent cold computes).
-    metrics["n_docs"] = docs.count()
     # per-pair distance budget (reference per-call k semantics)
     k = relative_k_col(cfg.sim_threshold, "doc_a", "doc_b")
     metrics["k_cutoff"] = "per_pair"
@@ -148,17 +146,13 @@ def resolve_entities(transcripts: DataFrame, cfg: ResolveConfig | None = None) -
     ).cache()
     # one action materializes the cache AND yields both stage counts
     # (map-side-combinable conditional count instead of a second pass)
-    row = scored.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(F.when(F.col("sim") >= cfg.sim_threshold, 1)).alias("m"),
-    ).collect()[0]
+    with stage(spark, "scoring"):
+        row = scored.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count(F.when(F.col("sim") >= cfg.sim_threshold, 1)).alias("m"),
+        ).collect()[0]
     metrics["n_pairs_scored"] = row["n"]
     metrics["n_matches"] = row["m"]
-    # stage wall times (driver action boundaries): scaling diagnostics
-    # — which stage stops scaling with cores shows up here, not in
-    # the end-to-end wall alone
-    metrics["t_score_action"] = round(_time.time() - _t0, 3)
-    _t0 = _time.time()
     commit(scored, "pairs_scored", size_col="doc_a", id_col="id_a")
     if cfg.metrics_dir:
         # lineage mode pays one extra census pass per stage anyway;
@@ -171,8 +165,8 @@ def resolve_entities(transcripts: DataFrame, cfg: ResolveConfig | None = None) -
         metrics["n_candidates"] = metrics["lineage_candidates"]["n_rows"]
         metrics["n_pruned"] = metrics["n_candidates"] - metrics["n_pairs_scored"]
     # scored is materialized in its own cache now — release the pair
-    # join's internal persist (ADVICE: no unbounded cache accumulation
-    # across repeated invocations in one driver)
+    # join's internal persist, so repeated invocations in one driver do
+    # not accumulate caches
     for fr in getattr(pairs, "_persisted_frames", []):
         fr.unpersist()
 
@@ -196,16 +190,14 @@ def resolve_entities(transcripts: DataFrame, cfg: ResolveConfig | None = None) -
             checkpoint_interval=cfg.cc_checkpoint_interval,
         )
         metrics["cc_path"] = "distributed"
-    metrics["t_cc_label"] = round(_time.time() - _t0, 3)
-    _t0 = _time.time()
     clusters = attach_singletons(labels, docs, "conv_id").cache()
-    crow = clusters.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct("cluster_id").alias("c"),
-    ).collect()[0]
+    with stage(spark, "clustering"):
+        crow = clusters.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.countDistinct("cluster_id").alias("c"),
+        ).collect()[0]
     metrics["n_records"] = crow["n"]
     metrics["n_clusters"] = crow["c"]
-    metrics["t_cluster_action"] = round(_time.time() - _t0, 3)
     commit(clusters, "clusters", id_col="id")
 
     return ResolveResult(docs, scored, matches, clusters, metrics)

@@ -10,8 +10,26 @@ and UTC timestamps for oracle comparability.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+STAGE_KEY = "triple_accel_spark.stage"
+
+
+@contextmanager
+def stage(spark: SparkSession, name: str):
+    """Label every Spark job run inside the block with the local
+    property ``triple_accel_spark.stage = name``. The previous label
+    comes back on exit, also after an exception, so the innermost label
+    wins and none is left behind once the outermost block exits."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty(STAGE_KEY)
+    sc.setLocalProperty(STAGE_KEY, name)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty(STAGE_KEY, prev)
 
 
 def get_spark(
@@ -71,7 +89,7 @@ def get_submit_session(app_name: str) -> SparkSession:
 
     ``getOrCreate`` silently IGNORES every ``.config()`` when a session
     already exists in the process (pyspark shell, notebooks, test
-    harnesses), so the tuned conf would silently not apply (ADVICE r5).
+    harnesses), so the tuned conf would silently not apply.
     A sentinel conf is checked after creation and a warning logged when
     a pre-existing session won the race; this function must be the
     first session creator in the process for the engine defaults to
