@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from triple_accel_spark.operators.clustering import (
+    attach_singletons,
     connected_components,
     local_connected_components,
 )
@@ -97,3 +98,47 @@ def test_cc_resumes_parent_format_manifest(spark, cc_graph, tmp_path):
     assert sorted(os.listdir(ckpt)) == before
     with open(os.path.join(ckpt, "manifest.json")) as f:
         assert json.load(f) == man
+
+
+def test_cc_converged_resume_runs_no_job_until_labels_are_read(spark, cc_graph, tmp_path):
+    """A manifest whose last entry is converged resumes with no Spark
+    job: the checkpoint is read back with a known schema, so no job
+    infers one from its parquet footers."""
+    edges = cc_graph("basic")
+    ckpt = str(tmp_path / "cc")
+    want = _labels(connected_components(edges, checkpoint_dir=ckpt))
+    sc = spark.sparkContext
+    group = "cc-converged-resume"
+    sc.setJobGroup(group, "resume")
+    try:
+        labels = connected_components(edges, checkpoint_dir=ckpt)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert _labels(labels) == want
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("name", SHARED_GRAPHS)
+def test_attach_singletons_equals_union_form(spark, cc_graph, name):
+    """The one-join ``attach_singletons`` equals the labels unioned with
+    self-labelled ids that have no label, on the shared CC graphs plus
+    ids that appear in no edge."""
+    edges = cc_graph(name)
+    id_type = edges.schema["id_a"].dataType.simpleString()
+    extra = ["s1", "s2"] if id_type == "string" else [1000, 1001]
+    ids = (
+        edges.select(F.col("id_a").alias("conv_id"))
+        .union(edges.select("id_b"))
+        .union(spark.createDataFrame([(x,) for x in extra], f"conv_id {id_type}"))
+    )
+    labels = connected_components(edges)
+    union_form = labels.union(
+        ids.select(F.col("conv_id").alias("id")).distinct()
+        .join(labels.select("id"), "id", "left_anti")
+        .withColumn("cluster_id", F.col("id"))
+    )
+    got = sorted(map(tuple, attach_singletons(labels, ids).collect()))
+    assert got == sorted(map(tuple, union_form.collect()))
+    assert {x for x, c in got if x == c} >= set(extra)

@@ -5,11 +5,12 @@ pipeline defaults, and the streaming per-pair-k boundary contract."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def test_registry_within_driver_window():
@@ -74,15 +75,15 @@ def test_cleanse_dedup_stages_execute_once(spark):
 
 def test_resolve_no_pre_blocking_action_at_defaults(spark, monkeypatch):
     """At default settings (per-pair k) ``resolve_entities`` issues
-    exactly ONE driver action before the fused scored-pairs aggregate:
-    the docs census ``count()``, which eagerly materializes the docs
-    cache before blocking/candidates/payload branches fan out from it
-    (round-6: Spark's block cache does not serialize concurrent cold
+    exactly TWO driver actions before the fused scored-pairs aggregate:
+    the docs census ``collect()``, which eagerly materializes the docs
+    cache before the blocking, candidate and doc-attach branches fan out
+    from it (Spark's block cache does not serialize concurrent cold
     computes, so a lazy cache re-ran the assemble aggregation up to 4x
-    in racing AQE branches). The round-4 rule this replaces ("no
-    pre-blocking action") guarded against a REDUNDANT pass; the census
-    pass is work every consumer needed anyway and is fused with the
-    n_docs metric."""
+    in racing AQE branches), and the candidate join's pin of its ids-only
+    base. The earlier rule this replaces ("no pre-blocking action")
+    guarded against a REDUNDANT pass; the census pass is work every
+    consumer needed anyway and yields n_docs and the docs lineage rows."""
     # patch the CONCRETE class (Spark 4: pyspark.sql.DataFrame is the
     # abstract base; instances are classic.dataframe.DataFrame)
     try:
@@ -111,23 +112,23 @@ def test_resolve_no_pre_blocking_action_at_defaults(spark, monkeypatch):
     t = spark.createDataFrame(tdf)
     res = resolve_entities(t, ResolveConfig(sim_threshold=0.88))
     assert calls, "no driver actions recorded"
-    # action 1: the eager docs-census count (cache pin + n_docs metric)
+    # action 1: the docs census collect (cache pin + n_docs metric)
     kind, cols = calls[0]
-    assert kind == "count" and "conv_id" in cols and "doc" in cols, (
-        f"first action was {calls[0]}, expected the docs census count"
-    )
-    # action 2: candidate_pairs' eager pin of its projected base cache
-    # (same round-6 rationale — it fans out into the size census, both
-    # join roles and the payload frame)
+    assert kind == "collect" and cols == (
+        "stage", "partition_id", "n_rows", "n_bytes", "min_id", "max_id"
+    ), f"first action was {calls[0]}, expected the docs census collect"
+    # action 2: candidate_pairs' eager pin of its projected base cache,
+    # which carries ids and block keys only (same rationale — it fans
+    # out into the size census and both join roles)
     kind, cols = calls[1]
-    assert kind == "count" and set(cols) == {"rid", "bk", "doc"}, (
-        f"second action was {calls[1]}, expected the candidate base pin"
+    assert kind == "count" and set(cols) == {"rid", "bk"}, (
+        f"second action was {calls[1]}, expected the ids-only base pin"
     )
-    # the first COLLECT is the fused scored-pairs aggregate — no other
-    # action may sneak in between the pins and it
+    # action 3: the scored census, which also counts the matches — no
+    # other action may sneak in between the pins and it
     kind, cols = calls[2]
-    assert kind == "collect" and set(cols) == {"n", "m"}, (
-        f"third action was {calls[2]}, expected the scored aggregate"
+    assert kind == "collect" and {"partition_id", "n_rows", "m_n_rows"} <= set(cols), (
+        f"third action was {calls[2]}, expected the scored census"
     )
     # census present and correct
     n_convs = t.select("conv_id").distinct().count()

@@ -177,6 +177,10 @@ def connected_components(
         F.col("u") != F.col("v")
     )
 
+    # a checkpoint holds a star round's output; reading it back with
+    # that schema (plan analysis, no job) spares the job that infers a
+    # schema from the parquet footers
+    cp_schema = _small_star(_large_star(_neighborhoods(e))).schema
     start_iter = 0
     converged = False
     manifest = {"iterations": []}
@@ -186,7 +190,7 @@ def connected_components(
             if man and man.get("iterations"):
                 manifest = man
                 last = man["iterations"][-1]
-                e = spark.read.parquet(last["path"])
+                e = spark.read.schema(cp_schema).parquet(last["path"])
                 start_iter = last["iteration"] + 1
                 converged = last["converged"]
 
@@ -203,7 +207,7 @@ def connected_components(
             if checkpoint_dir and at_cp:
                 path = os.path.join(checkpoint_dir, f"iter_{it:04d}")
                 e.write.mode("overwrite").parquet(path)
-                e = spark.read.parquet(path)
+                e = spark.read.schema(cp_schema).parquet(path)
             else:
                 # lazy barrier: plan becomes a LogicalRDD (constant size);
                 # the RDD materializes with the next action, so deferred
@@ -289,10 +293,14 @@ def local_connected_components(edges: DataFrame, src: str = "id_a", dst: str = "
 def attach_singletons(
     labels: DataFrame, all_ids: DataFrame, id_col: str = "conv_id"
 ) -> DataFrame:
-    """Union in self-labeled clusters for records that produced no
-    match edge."""
+    """``(id, cluster_id)`` for every distinct id of ``all_ids``: its
+    label, or itself for a record that produced no match edge. One left
+    join of the ids to the labels.
+
+    Precondition: every labelled id is among ``all_ids`` (a label whose
+    id is not is dropped). Every caller meets it, since its labels come
+    from match edges between records of ``all_ids``."""
     ids = all_ids.select(F.col(id_col).alias("id")).distinct()
-    singles = ids.join(labels.select("id"), "id", "left_anti").withColumn(
-        "cluster_id", F.col("id")
+    return ids.join(labels, "id", "left").select(
+        "id", F.coalesce("cluster_id", "id").alias("cluster_id")
     )
-    return labels.union(singles)

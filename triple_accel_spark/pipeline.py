@@ -1,12 +1,18 @@
 """End-to-end entity resolution over transcript tables.
 
-    scan -> assemble docs -> MinHash blocking -> salted pair self-join
-    -> length-prune -> vectorized edit-distance scoring -> threshold
-    -> connected components (checkpointed) -> clusters + metrics
+    scan -> assemble docs -> MinHash blocking -> salted ids-only pair
+    self-join -> document attach -> length-prune -> vectorized
+    edit-distance scoring -> threshold -> connected components
+    (checkpointed) -> clusters + metrics + lineage sink
 
 The stages are the Spark-native re-expression of the reference's
 kernel family (BASELINE.json north_star); each stage is independently
 importable from ``triple_accel_spark.operators``.
+
+The metrics and the per-partition lineage rows cost no jobs of their
+own: each stage's census rides on the action that materializes the
+stage, and the sink is written from the driver. The one exception is
+the candidate census of lineage mode (see ``resolve_entities``).
 """
 
 from __future__ import annotations
@@ -19,12 +25,18 @@ from pyspark.sql import functions as F
 from triple_accel_spark.kernels.costs import EditCosts, LEVENSHTEIN_COSTS
 from triple_accel_spark.operators.assemble import assemble_documents
 from triple_accel_spark.operators.blocking import (
-    with_minhash_blocks,
+    minhash_band_table,
     with_prefix_blocks,
 )
 from triple_accel_spark.operators.clustering import (
     attach_singletons,
     connected_components,
+)
+from triple_accel_spark.operators.lineage import (
+    census_aggs,
+    census_rows,
+    partition_stats,
+    write_stage_metrics,
 )
 from triple_accel_spark.operators.pairs import candidate_pairs
 from triple_accel_spark.operators.scoring import relative_k_col, score_pairs
@@ -93,48 +105,75 @@ class ResolveResult:
 
 def resolve_entities(transcripts: DataFrame, cfg: ResolveConfig | None = None) -> ResolveResult:
     """Run the full pipeline; returns intermediate and final frames plus
-    a driver-side metrics dict (stage row counts)."""
+    a driver-side metrics dict (stage row counts).
+
+    Every stage count and, with ``metrics_dir``, every stage's
+    per-partition lineage census comes from the action that already
+    materializes the stage: the docs pin, the scored aggregate (which
+    also carries the ``matches`` census) and the clusters pin, each
+    grouped by ``spark_partition_id()``. The census rows are written to
+    the sink from the driver. The one extra job of lineage mode is the
+    ``candidates`` census, one scan of the candidate frame persisted for
+    it."""
     cfg = cfg or ResolveConfig()
     metrics: dict = {}
     spark = transcripts.sparkSession
+    pid = F.spark_partition_id().alias("partition_id")
 
-    def commit(df, name, **kw):
+    # a stage's census rows: written to the sink in lineage mode; the
+    # stage's row count is returned either way
+    def commit(name, rows, prefix=""):
+        rows = census_rows(rows, prefix)
         if cfg.metrics_dir:
-            from triple_accel_spark.operators.lineage import commit_stage_metrics
-
-            metrics[f"lineage_{name}"] = commit_stage_metrics(
-                df, name, cfg.metrics_dir, run_id=cfg.run_id, **kw
+            metrics[f"lineage_{name}"] = write_stage_metrics(
+                rows, name, cfg.metrics_dir, run_id=cfg.run_id
             )
+        return sum(r[1] for r in rows)
 
     docs = assemble_documents(transcripts).cache()
-    # the docs cache is materialized HERE, by the count that also gives
+    # the docs cache is materialized HERE, by the census that also gives
     # the n_docs metric: blocking, the candidate machinery, the payload
-    # re-attach and the docs census all fan out from `docs`, and with a
-    # cold cache concurrent branches each re-run the assemble
-    # aggregation (Spark's block cache does not serialize concurrent
-    # cold computes)
+    # attach and the clusters all fan out from `docs`, and with a cold
+    # cache concurrent branches each re-run the assemble aggregation
+    # (Spark's block cache does not serialize concurrent cold computes)
     with stage(spark, "assemble"):
-        metrics["n_docs"] = docs.count()
-    commit(docs, "docs", size_col="doc", id_col="conv_id")
+        rows = partition_stats(docs, "docs", size_col="doc", id_col="conv_id").collect()
+    metrics["n_docs"] = commit("docs", rows)
     # per-pair distance budget (reference per-call k semantics)
     k = relative_k_col(cfg.sim_threshold, "doc_a", "doc_b")
     metrics["k_cutoff"] = "per_pair"
 
+    # the candidate join carries ids only; each side's document comes
+    # from the cached docs afterwards, not copied into every band row
     if cfg.blocking == "prefix":
-        blocked = with_prefix_blocks(docs, "doc", prefix_len=cfg.prefix_len)
+        keys = with_prefix_blocks(docs, "doc", prefix_len=cfg.prefix_len)
     else:
-        blocked = with_minhash_blocks(
-            docs, "doc", q=cfg.q, num_hashes=cfg.num_hashes, num_bands=cfg.num_bands
+        keys = minhash_band_table(
+            # with_minhash_blocks' join back to the records drops NULL ids
+            docs.where(F.col("conv_id").isNotNull()),
+            "conv_id", "doc", q=cfg.q, num_hashes=cfg.num_hashes,
+            num_bands=cfg.num_bands,
         )
-    pairs = candidate_pairs(
-        blocked,
+    ids = candidate_pairs(
+        keys,
         id_col="conv_id",
         block_col="block_key",
-        payload_cols=("doc",),
+        payload_cols=(),
         max_block_size=cfg.max_block_size,
         salt_threshold=cfg.salt_threshold,
         salt_shards=cfg.salt_shards,
     )
+    pairs = ids
+    for s in ("a", "b"):
+        pairs = pairs.join(
+            docs.select(F.col("conv_id").alias(f"id_{s}"), F.col("doc").alias(f"doc_{s}")),
+            f"id_{s}",
+        )
+    pairs = pairs.select("id_a", "id_b", "doc_a", "doc_b")
+    if cfg.metrics_dir:
+        # the candidate census below scans this cache instead of
+        # re-running blocking, the block join and the doc attach
+        pairs = pairs.persist()
 
     scored = score_pairs(
         pairs,
@@ -144,34 +183,34 @@ def resolve_entities(transcripts: DataFrame, cfg: ResolveConfig | None = None) -
         costs=cfg.costs,
         sim_threshold=None,
     ).cache()
-    # one action materializes the cache AND yields both stage counts
-    # (map-side-combinable conditional count instead of a second pass)
+    matched = F.col("sim") >= cfg.sim_threshold
+    # one action materializes the cache and takes the census of both
+    # pairs_scored and its filter matches (same partitions)
     with stage(spark, "scoring"):
-        row = scored.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count(F.when(F.col("sim") >= cfg.sim_threshold, 1)).alias("m"),
-        ).collect()[0]
-    metrics["n_pairs_scored"] = row["n"]
-    metrics["n_matches"] = row["m"]
-    commit(scored, "pairs_scored", size_col="doc_a", id_col="id_a")
+        rows = scored.groupBy(pid).agg(
+            *census_aggs(size_col="doc_a", id_col="id_a"),
+            *census_aggs(id_col="id_a", where=matched, prefix="m_"),
+        ).collect()
+    metrics["n_pairs_scored"] = commit("pairs_scored", rows)
     if cfg.metrics_dir:
-        # lineage mode pays one extra census pass per stage anyway;
         # the pre-cutoff candidate census makes the PRUNE count a
         # recorded lineage fact (north-rule metric rows: pairs scored,
         # prunes, cluster merges) instead of prose. n_pruned counts
         # candidates dropped by the k cutoff end to end — the Catalyst
         # length prefilter plus the kernel's bound/band rejects.
-        commit(pairs, "candidates", size_col="doc_a", id_col="id_a")
-        metrics["n_candidates"] = metrics["lineage_candidates"]["n_rows"]
+        with stage(spark, "lineage"):
+            crows = partition_stats(pairs, "candidates", size_col="doc_a", id_col="id_a").collect()
+        pairs.unpersist()
+        metrics["n_candidates"] = commit("candidates", crows)
         metrics["n_pruned"] = metrics["n_candidates"] - metrics["n_pairs_scored"]
     # scored is materialized in its own cache now — release the pair
     # join's internal persist, so repeated invocations in one driver do
     # not accumulate caches
-    for fr in getattr(pairs, "_persisted_frames", []):
+    for fr in ids._persisted_frames:
         fr.unpersist()
 
-    matches = scored.where(F.col("sim") >= cfg.sim_threshold)
-    commit(matches, "matches", id_col="id_a")
+    matches = scored.where(matched)
+    metrics["n_matches"] = commit("matches", rows, prefix="m_")
 
     if metrics["n_matches"] <= cfg.cc_local_threshold and not cfg.checkpoint_dir:
         # bounded small-graph fast path (see local_connected_components);
@@ -191,13 +230,14 @@ def resolve_entities(transcripts: DataFrame, cfg: ResolveConfig | None = None) -
         )
         metrics["cc_path"] = "distributed"
     clusters = attach_singletons(labels, docs, "conv_id").cache()
+    # each cluster is labelled by its minimum id, a member labelling
+    # itself, so the clusters are the rows with id == cluster_id
     with stage(spark, "clustering"):
-        crow = clusters.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct("cluster_id").alias("c"),
-        ).collect()[0]
-    metrics["n_records"] = crow["n"]
-    metrics["n_clusters"] = crow["c"]
-    commit(clusters, "clusters", id_col="id")
+        rows = clusters.groupBy(pid).agg(
+            *census_aggs(id_col="id"),
+            F.count(F.when(F.col("id") == F.col("cluster_id"), 1)).alias("n_roots"),
+        ).collect()
+    metrics["n_records"] = commit("clusters", rows)
+    metrics["n_clusters"] = sum(r["n_roots"] for r in rows)
 
     return ResolveResult(docs, scored, matches, clusters, metrics)
