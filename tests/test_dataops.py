@@ -9,6 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from triple_accel_spark.operators.blocking import minhash_band_table
 from triple_accel_spark.operators.dedup import (
     dedup_exact,
     exact_duplicates,
@@ -16,6 +17,7 @@ from triple_accel_spark.operators.dedup import (
     ngram_jaccard,
     simhash64,
     embedding_near_duplicates,
+    with_simhash,
 )
 from triple_accel_spark.operators.multimodal import extract_features, synth_media
 from triple_accel_spark.operators.similarity import (
@@ -28,6 +30,7 @@ from triple_accel_spark.operators.text import (
     lang_id,
     quality_features,
     token_count,
+    with_fingerprint,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -53,6 +56,39 @@ def test_exact_duplicates(spark):
     assert groups[0]["n_copies"] == 3 and groups[0]["ids"] == [1, 3, 4]
     kept = sorted(r["doc_id"] for r in dedup_exact(df).collect())
     assert kept == [1, 2, 5]
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        lambda d: minhash_band_table(d, "doc_id", "text"),
+        lambda d: minhash_lsh_duplicates(d, jaccard_threshold=0.5),
+        with_simhash,
+        with_fingerprint,
+    ],
+    ids=["minhash_band_table", "minhash_lsh_duplicates", "with_simhash",
+         "with_fingerprint"],
+)
+def test_gram_builder_null_policy(spark, op):
+    """The four sketch operators share ``exploded_gram_rows``' NULL
+    policy: NULL text and NULL ids (here two documents, one a copy of a
+    real one) give no row or pair, and the other rows are exactly those
+    of the frame without them."""
+    text = "the quick brown fox jumps over the lazy dog again and again"
+    clean = [(1, text), (2, text + "!"), (3, "a different document entirely")]
+    dirty = clean + [(4, None), (None, text), (None, "another null id doc")]
+
+    def rows(data):
+        out = op(spark.createDataFrame(data, "doc_id bigint, text string"))
+        try:
+            return sorted((tuple(r) for r in out.collect()), key=repr)
+        finally:
+            for fr in getattr(out, "_persisted_frames", []):
+                fr.unpersist()
+
+    got = rows(dirty)
+    assert got and not any(None in r for r in got), got
+    assert got == rows(clean)
 
 
 def test_minhash_lsh_duplicates(spark):

@@ -9,6 +9,7 @@ from __future__ import annotations
 import random
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from tests.test_reference_oracle import (
@@ -19,8 +20,10 @@ from tests.test_reference_oracle import (
     SEARCH_CASES,
     TRACE_CASES,
 )
+from triple_accel_spark.functions import _dist_series
 from triple_accel_spark.kernels.banded import lev_batch
 from triple_accel_spark.kernels.costs import LEVENSHTEIN_COSTS
+from triple_accel_spark.kernels.encode import to_bytes_list
 from triple_accel_spark.kernels.hamming import hamming_batch, hamming_search_batch
 from triple_accel_spark.kernels.myers import myers_batch
 from triple_accel_spark.kernels.reference import (
@@ -44,6 +47,25 @@ def test_hamming_batch_invalid_rows():
     dist, ok = hamming_batch([b"ab", None, b"abc"], [b"abc", b"x", b"abd"])
     assert list(ok) == [False, False, True]
     assert dist[2] == 1
+
+
+def test_pandas_nulls_are_invalid_rows():
+    """``pd.NA`` (the NULL of pandas ``string`` Series), NaN and NaT
+    encode as invalid rows, not as the text of their repr."""
+    rows, ok = to_bytes_list([pd.NA, None, float("nan"), pd.NaT, "<NA>", b"b"])
+    assert list(ok) == [False, False, False, False, True, True]
+    assert rows[4:] == [b"<NA>", b"b"]
+    dist, ok = hamming_batch([pd.NA, b"abc"], [b"abc", b"abd"])
+    assert list(ok) == [False, True] and dist[1] == 1
+
+
+@pytest.mark.parametrize("k", [None, 3])
+def test_dist_series_pd_na_scores_null(k):
+    a = pd.Series(["<NA>", None, "abc"], dtype="string")
+    b = pd.Series([None, "<NA>", "abd"], dtype="string")
+    got = _dist_series(a, b, k, LEVENSHTEIN_COSTS)
+    assert got.isna().tolist() == [True, True, False]
+    assert got[2] == 1
 
 
 @pytest.mark.parametrize("needle,hay,k,st,want", HAMMING_SEARCH_CASES)
@@ -122,8 +144,8 @@ def test_search_batch_vectors_mixed():
 
 
 def test_search_batch_null_rows():
-    got = lev_search_batch([b"ab", None], [b"xaby", b"x"], 1, "all")
-    assert got[1] is None
+    got = lev_search_batch([b"ab", None, pd.NA], [b"xaby", b"x", b"<NA>"], 1, "all")
+    assert got[1] is None and got[2] is None
     assert got[0] == [
         tuple(m) for m in levenshtein_search(b"ab", b"xaby", 1, "all")
     ]

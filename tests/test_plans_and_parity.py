@@ -140,9 +140,66 @@ def test_minhash_verify_plan_one_gram_aggregation(spark):
         (agg,) = aggs
         assert f"collect_set({gh}" in agg
         assert f"min(xxhash64({gh}" in agg
+        # |A∩B| is computed once per pair, not copied into the join
+        # condition and the jaccard filter
+        assert plan.count("array_intersect") == 1, plan
     finally:
         for fr in out._persisted_frames:
             fr.unpersist()
+
+
+def test_cleanse_rebalances_the_corpus_once(spark, tmp_path):
+    """``prepare_training_corpus`` rebalances its one-file corpus and
+    hands the result to ``with_lang_id``, which must pass it through
+    rather than stack a second round-robin on it. The three consumers of
+    the corpus (annotations, lang ids, lang tokens) each see one
+    ``Repartition`` in the analyzed plan, and the executed plan holds
+    one round-robin exchange per scan (a stacked second one also keeps
+    the token branch from reusing the annotations' exchange)."""
+    from triple_accel_spark.operators.corpus import prepare_training_corpus
+
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(i, f"the cat sat on the mat number {i} and then some") for i in range(20)],
+        "doc_id long, text string",
+    ).coalesce(1).write.parquet(path)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        res = prepare_training_corpus(spark.read.parquet(path))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    try:
+        flagged = res._persisted_frames[0]
+        analyzed = flagged._jdf.queryExecution().analyzed().toString()
+        plan = _plan(flagged)
+        lines = plan.splitlines()
+        scans = sum("FileScan" in ln for ln in lines)
+        round_robins = sum(
+            "Exchange RoundRobinPartitioning" in ln and "ReusedExchange" not in ln
+            for ln in lines
+        )
+        assert analyzed.count("Repartition") == 3, analyzed
+        assert round_robins == scans, plan
+    finally:
+        res.unpersist()
+
+
+def test_rebalance_probe_propagates_unexpected_errors(spark, monkeypatch):
+    """A streaming frame (whose file probe raises ``AnalysisException``)
+    passes through unchanged; any other probe failure propagates."""
+    from triple_accel_spark.operators.blocking import rebalance_small_scan
+
+    stream = spark.readStream.format("rate").load()
+    assert rebalance_small_scan(stream) is stream
+
+    def boom(self):
+        raise MemoryError("probe")
+
+    df = spark.range(3)
+    monkeypatch.setattr(type(df), "inputFiles", boom)
+    with pytest.raises(MemoryError):
+        rebalance_small_scan(df)
 
 
 def test_with_simhash_single_aggregation(spark):

@@ -20,6 +20,7 @@ from triple_accel_spark.kernels.costs import (
     LEVENSHTEIN_COSTS,
     RDAMERAU_COSTS,
 )
+from triple_accel_spark.kernels.encode import bag_l1, encode_batch
 from triple_accel_spark.kernels.myers import myers_batch
 from triple_accel_spark.kernels.reference import levenshtein as ref_lev
 
@@ -168,3 +169,83 @@ def test_anagram_rows_exact_under_band():
     for i in range(1, len(A), 2):
         true, _ = ref_lev(A[i], B[i])
         assert bool(ok[i]) == (true <= k)
+
+
+# --- bag-L1 reject at its boundary -----------------------------------
+# A substitution by a letter absent from both strings moves the
+# histogram L1 by exactly 2; appending such a letter moves it by 1.
+
+
+def _boundary_pair(n_subs: int, n_appends: int, L: int = 40) -> tuple[bytes, bytes]:
+    a = _rand(L)
+    b = bytearray(a)
+    fresh = iter(range(65, 91))  # uppercase: never in `a`
+    for p in RNG.choice(L, size=n_subs, replace=False):
+        b[int(p)] = next(fresh)
+    for _ in range(n_appends):
+        b.append(next(fresh))
+    return a, bytes(b)
+
+
+def _bag_bound(a: bytes, b: bytes, costs: EditCosts) -> int:
+    """The prefilter's lower bound for one pair (see ``lev_batch``;
+    ``myers_batch``'s ``bag_lower_bound`` is its unit-cost case)."""
+    a_mat, a_len, _ = encode_batch([a])
+    b_mat, b_len, _ = encode_batch([b])
+    l1 = int(bag_l1(a_mat, a_len, b_mat, b_len)[0])
+    m2g = min(costs.mismatch_cost, 2 * costs.gap_cost)
+    dl = abs(len(a) - len(b))
+    return max((l1 * m2g + 1) // 2, dl * costs.gap_cost + (costs.start_gap_cost if dl else 0))
+
+
+def _check_boundary(run, costs, kept, rejected, ks_kept, ks_rejected, per_row):
+    """``kept`` pairs sit at bound == k == true distance and must come
+    back exact; ``rejected`` pairs sit at bound == k + 1."""
+    pairs = kept + rejected
+    ks = ks_kept + ks_rejected
+    for (a, b), k in zip(kept, ks_kept):
+        assert _bag_bound(a, b, costs) == k == ref_lev(a, b, costs=costs)[0]
+    for (a, b), k in zip(rejected, ks_rejected):
+        assert _bag_bound(a, b, costs) == k + 1
+    k_arg = np.array(ks, dtype=np.int64) if per_row else ks[0]
+    d, ok = run([p[0] for p in pairs], [p[1] for p in pairs], k_arg)
+    n = len(kept)
+    assert ok[:n].all() and list(d[:n]) == ks_kept
+    assert not ok[n:].any()
+
+
+@pytest.mark.parametrize("per_row", [False, True])
+def test_bag_reject_boundary_myers(per_row):
+    ks = [1, 3, 6] if per_row else [4, 4, 4]
+    kept, rejected = [], []
+    for k in ks:
+        kept += [_boundary_pair(k, 0), _boundary_pair(k - 1, 1)]  # L1 = 2k, 2k-1
+        rejected += [_boundary_pair(k + 1, 0), _boundary_pair(k, 1)]
+    doubled = [k for k in ks for _ in range(2)]
+    _check_boundary(
+        myers_batch, LEVENSHTEIN_COSTS, kept, rejected, doubled, doubled, per_row
+    )
+
+
+@pytest.mark.parametrize("per_row", [False, True])
+@pytest.mark.parametrize(
+    "costs",
+    # min(mismatch, 2*gap) = 2*gap = 2, and = mismatch = 2 with a gap open
+    [EditCosts(3, 1), EditCosts(2, 3, 1)],
+)
+def test_bag_reject_boundary_lev_batch(costs, per_row):
+    """Substitutions by fresh letters cost ``m2g = min(mismatch,
+    2*gap)`` each and move L1 by 2, so ``n`` of them put the bound and
+    the distance at ``n * m2g``; one more appended letter lifts the
+    bound by one."""
+    m2g = min(costs.mismatch_cost, 2 * costs.gap_cost)
+    subs = [2, 3, 5] if per_row else [3, 3, 3]
+    kept = [_boundary_pair(n, 0) for n in subs]
+    rejected = [_boundary_pair(n, 1) for n in subs]
+    ks = [n * m2g for n in subs]
+
+    def run(a, b, k):
+        d, ok, _ = lev_batch(a, b, k, costs)
+        return d, ok
+
+    _check_boundary(run, costs, kept, rejected, ks, ks, per_row)

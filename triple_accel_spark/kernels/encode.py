@@ -13,36 +13,39 @@ from __future__ import annotations
 from typing import Sequence
 
 import numpy as np
+import pandas as pd
 
 
 def to_bytes_list(rows: Sequence) -> tuple[list[bytes], np.ndarray]:
     """Normalize a column batch to a list of ``bytes`` plus a validity
-    mask. ``None``/NaN rows become ``b""`` with ``valid=False``; str
-    rows are UTF-8 encoded (Spark StringType is UTF-8; byte semantics —
-    reference scores raw u8 bytes, lib.rs:41-44)."""
+    mask. ``None``, ``pd.NA`` and NaN/NaT rows become ``b""`` with
+    ``valid=False``; str rows are UTF-8 encoded (Spark StringType is
+    UTF-8; byte semantics — reference scores raw u8 bytes,
+    lib.rs:41-44)."""
     out: list[bytes] = []
     valid = np.ones(len(rows), dtype=bool)
     for i, r in enumerate(rows):
-        if r is None:
-            out.append(b"")
-            valid[i] = False
-        elif isinstance(r, bytes):
+        if isinstance(r, bytes):
             out.append(r)
-        elif isinstance(r, bytearray):
-            out.append(bytes(r))
         elif isinstance(r, str):
             out.append(r.encode("utf-8"))
+        elif isinstance(r, bytearray):
+            out.append(bytes(r))
+        elif r is None or r is pd.NA or _is_nan(r):
+            out.append(b"")
+            valid[i] = False
         else:
-            # pandas NaN or other nulls
-            try:
-                if r != r:  # NaN
-                    out.append(b"")
-                    valid[i] = False
-                    continue
-            except Exception:
-                pass
             out.append(str(r).encode("utf-8"))
     return out, valid
+
+
+def _is_nan(r) -> bool:
+    """NaN and NaT are the scalars unequal to themselves; a value whose
+    comparison has no truth value (an array) is not one."""
+    try:
+        return bool(r != r)
+    except (TypeError, ValueError):
+        return False
 
 
 def translate_batch(

@@ -1,23 +1,32 @@
 """Blocking-key generation: q-gram shingles, MinHash band keys, and
 simple SQL-expressible prefix keys.
 
-All key generation is pure Column expressions (JVM-side, whole-stage
-codegen, zero Python): shingles via ``sequence``+``substring`` inside
-``transform``, MinHash via ``xxhash64(gram, seed)`` folded with
-``array_min``, band keys via ``xxhash64`` over the banded signature
-slice. A conversation lands in ``num_bands`` blocks; two conversations
-collide in a band with probability ``s^band_size`` for Jaccard
-similarity ``s`` — the standard LSH S-curve, tuned for high recall at
-the 0.99-F1 operating point.
+Every corpus-scale sketch starts from ``exploded_gram_rows``, the one
+place where an ``(id, text)`` frame becomes q-gram rows: it rebalances
+small scans, normalizes the text, drops rows with a NULL text or id
+(a NULL document cannot be blocked, sketched or matched) and explodes
+the gram positions. ``minhash_band_table`` here, and
+``dedup.minhash_lsh_duplicates``, ``dedup.with_simhash`` and
+``text.with_fingerprint``, add only their own ``groupBy(id)``
+aggregation on top.
 
-At 10^12-turn scale this stage is a narrow projection followed by one
-explode — no shuffle until the pair join groups by block key.
+All key generation is pure Column expressions (JVM-side, whole-stage
+codegen, zero Python). MinHash is ``min(xxhash64(gram, seed))`` per
+seed, band keys ``xxhash64`` over the banded signature slice. A
+conversation lands in ``num_bands`` blocks; two conversations collide
+in a band with probability ``s^band_size`` for Jaccard similarity
+``s`` — the standard LSH S-curve, tuned for high recall at the 0.99-F1
+operating point. The Column forms (``qgrams``, ``minhash_signature``,
+``with_minhash_blocks_expr``) give the same keys without an
+aggregation, for streaming.
 """
 
 from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -38,16 +47,22 @@ def rebalance_small_scan(df: DataFrame) -> DataFrame:
     ``df`` unchanged unless the frame reads fewer files than the
     cluster has cores AND every file is local AND the total size is
     under ``cores * 8 MB`` (the rebalancing shuffle then costs
-    milliseconds). Any probe failure — remote storage, streaming
-    frames, no file source — leaves the plan alone. The keyless
+    milliseconds). A frame that is already a projection or filter of a
+    round-robin repartition passes through (``inputFiles`` still lists
+    the files under it). A failed probe — remote storage, streaming
+    frames — or no file source leaves the plan alone. The keyless
     ``repartition`` is round-robin with Spark's default
     sort-before-repartition, so retries stay deterministic, and every
     caller aggregates with partition-order-insensitive functions
     (min / count / bit_xor / distinct, and collect_set read only through
     set sizes), so results are identical."""
+    if _rebalanced(df):
+        return df
     try:
         files = df.inputFiles()
-    except Exception:
+    except (PySparkException, Py4JJavaError):
+        # streaming frames (AnalysisException) and storage the JVM
+        # cannot list: leave the plan alone
         return df
     p = df.sparkSession.sparkContext.defaultParallelism
     if not files or len(files) >= p:
@@ -69,13 +84,20 @@ def rebalance_small_scan(df: DataFrame) -> DataFrame:
     return df.repartition(p)
 
 
-def normalized_text(col, lowercase: bool = True) -> Column:
+def _rebalanced(df: DataFrame) -> bool:
+    """Whether ``df`` is projections and filters over a round-robin
+    repartition, i.e. already spread by ``rebalance_small_scan``."""
+    node = df._jdf.queryExecution().analyzed()
+    while node.nodeName() in ("Project", "Filter", "SubqueryAlias"):
+        node = node.children().head()
+    return node.nodeName() == "Repartition" and node.shuffle()
+
+
+def normalized_text(col) -> Column:
     """Canonicalize text for blocking (NOT for scoring — scoring uses
     raw text): lowercase + collapse whitespace runs."""
     c = F.col(col) if isinstance(col, str) else col
-    if lowercase:
-        c = F.lower(c)
-    return F.regexp_replace(c, r"\s+", " ")
+    return F.regexp_replace(F.lower(c), r"\s+", " ")
 
 
 def qgrams(col, q: int = 4) -> Column:
@@ -92,35 +114,43 @@ def qgrams(col, q: int = 4) -> Column:
 
 
 def exploded_gram_rows(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    q: int,
-    gram_alias: str = "_g",
-    index_alias: str | None = None,
+    df: DataFrame, id_col: str, text_col: str, q: int, normalize: bool = True
 ) -> DataFrame:
-    """One row per q-gram start position of ``text_col``:
-    ``(id, gram [, index])`` — the corpus-scale gram shape shared by
-    the minhash / simhash / fingerprint operators (plain codegen
-    ``explode`` + ``substring``; no higher-order functions). Texts
-    shorter than ``q`` yield exactly one row — the whole text at index
-    0 — matching ``qgrams``'s short-text fallback, so Column-form and
-    exploded-form sketches stay bit-identical. Callers pre-project
-    ``(id_col, text_col)`` and pre-filter NULL text per their policy."""
-    n = F.length(text_col)
-    rows = df.select(
+    """``(id_col, _g, _i)`` — one row per q-gram start position of
+    ``text_col``: the gram and its 0-based index. The one place the
+    sketch operators turn documents into grams, in this order:
+
+    1. ``rebalance_small_scan`` over the raw ``(id, text)`` projection,
+       so the work below runs after the rebalancing shuffle, not inside
+       a one-task scan;
+    2. rows with NULL text or a NULL id are dropped — a NULL document
+       has nothing to sketch and a NULL id names no document;
+    3. ``normalized_text`` unless ``normalize=False`` (the fingerprint
+       hashes raw text);
+    4. plain codegen ``explode`` + ``substring`` (no higher-order
+       functions). A text shorter than ``q`` yields one row — the whole
+       text at index 0 — matching ``qgrams``'s short-text fallback, so
+       Column-form and exploded-form sketches stay bit-identical."""
+    raw = rebalance_small_scan(
+        df.select(F.col(id_col), F.col(text_col).alias("_t"))
+    ).where(F.col(id_col).isNotNull() & F.col("_t").isNotNull())
+    text = normalized_text("_t") if normalize else F.col("_t")
+    base = raw.select(id_col, text.alias("_t"))
+    n = F.length("_t")
+    rows = base.select(
         id_col,
         F.explode(
             F.sequence(F.lit(1), F.greatest(n - F.lit(q - 1), F.lit(1)))
-        ).alias("_i"),
-        text_col,
+        ).alias("_p"),
+        "_t",
     )
-    cols = [id_col, F.expr(f"substring({text_col}, _i, {q})").alias(gram_alias)]
-    if index_alias is not None:
-        # int arithmetic keeps the index the same TYPE as the Column
-        # forms' sequence(0, size-1) elements — xxhash64 is type-aware
-        cols.append((F.col("_i") - F.lit(1)).alias(index_alias))
-    return rows.select(*cols)
+    # int arithmetic keeps the index the same TYPE as the Column forms'
+    # sequence(0, size-1) elements — xxhash64 is type-aware
+    return rows.select(
+        id_col,
+        F.expr(f"substring(_t, _p, {q})").alias("_g"),
+        (F.col("_p") - F.lit(1)).alias("_i"),
+    )
 
 
 def gram_hash_expr(col: Column, gram_hash: str, salt: Column | None = None) -> Column:
@@ -178,41 +208,24 @@ def minhash_band_table(
     q: int = 4,
     num_hashes: int = 16,
     num_bands: int = 8,
-    lowercase: bool = True,
-    out_col: str = "block_key",
 ) -> DataFrame:
     """``(id, block_key)`` — one row per (record, band).
 
-    Scale-first minhash: explode q-gram ROWS (plain ``explode`` +
-    ``substring``, fully codegen — no higher-order functions, whose
-    per-element interpreted eval dominates wall time and whose inlined
-    expression trees blow up codegen), then ONE map-side-combinable
-    ``groupBy(id)`` with ``num_hashes`` ``min(xxhash64(gram, seed))``
-    aggregates. The shuffle carries only (id, 16 longs) regardless of
-    document size; at 10^12 turns this is the only viable shape."""
+    Scale-first minhash: the gram rows of ``exploded_gram_rows`` feed
+    ONE map-side-combinable ``groupBy(id)`` with ``num_hashes``
+    ``min(xxhash64(gram, seed))`` aggregates. The shuffle carries only
+    (id, 16 longs) regardless of document size; at 10^12 turns this is
+    the only viable shape."""
     bands = minhash_band_keys(
         [F.col(f"_h{s}") for s in range(num_hashes)], num_bands
     )
-    # NULL policy: a NULL document yields no band keys (it cannot be
-    # blocked or matched) — enforced identically in the expr path.
-    # Rebalance the RAW projection and normalize AFTER it, so the regex
-    # normalization runs post-shuffle instead of inside a one-task scan
-    raw = rebalance_small_scan(
-        df.select(F.col(id_col).alias("_mid"), F.col(text_col).alias("_raw"))
-    )
-    base = raw.select(
-        "_mid", normalized_text("_raw", lowercase).alias("_t")
-    ).where(F.col("_t").isNotNull())
-    grams = exploded_gram_rows(base, "_mid", "_t", q)
-    sig = grams.groupBy("_mid").agg(
+    sig = exploded_gram_rows(df, id_col, text_col, q).groupBy(id_col).agg(
         *[
             F.min(F.xxhash64("_g", F.lit(s))).alias(f"_h{s}")
             for s in range(num_hashes)
         ]
     )
-    return sig.select(
-        F.col("_mid").alias(id_col), F.explode(F.array(*bands)).alias(out_col)
-    )
+    return sig.select(id_col, F.explode(F.array(*bands)).alias("block_key"))
 
 
 def with_minhash_blocks(
@@ -221,22 +234,13 @@ def with_minhash_blocks(
     q: int = 4,
     num_hashes: int = 16,
     num_bands: int = 8,
-    lowercase: bool = True,
-    out_col: str = "block_key",
     id_col: str = "conv_id",
 ) -> DataFrame:
     """Explode each row into ``num_bands`` rows with a ``block_key``
-    (band table joined back on ``id_col`` — co-partitioned equi-join).
-
-    NULL policy: rows with NULL text produce no gram rows (and rows
-    with NULL id cannot equi-join back), so neither survives into the
-    blocked output — deliberate: a NULL document cannot be blocked or
-    matched; route such rows to a quarantine sink upstream if they must
-    be accounted for. ``with_minhash_blocks_expr`` applies the same
-    policy explicitly."""
-    keys = minhash_band_table(
-        df, id_col, text_col, q, num_hashes, num_bands, lowercase, out_col
-    )
+    (``minhash_band_table`` joined back on ``id_col`` — co-partitioned
+    equi-join). Rows the gram builder drops (NULL text or id) have no
+    keys and so do not survive the join."""
+    keys = minhash_band_table(df, id_col, text_col, q, num_hashes, num_bands)
     return df.join(keys, id_col)
 
 
@@ -246,8 +250,6 @@ def with_minhash_blocks_expr(
     q: int = 4,
     num_hashes: int = 16,
     num_bands: int = 8,
-    lowercase: bool = True,
-    out_col: str = "block_key",
 ) -> DataFrame:
     """Pure-Column-expression variant of ``with_minhash_blocks`` —
     produces IDENTICAL keys (same gram set, same hash layout) with no
@@ -259,17 +261,15 @@ def with_minhash_blocks_expr(
     ``streaming.incremental``, which cannot run the aggregation form on
     a stream; it stays as long as that caller does.
 
-    NULL policy (matches the batch path): rows with NULL text emit no
-    block rows — the batch path drops them because a NULL text yields
-    no gram rows to aggregate, so here the key array is nulled out
-    before the explode."""
-    norm = normalized_text(text_col, lowercase)
+    Rows with NULL text emit no block rows, as in the batch path: the
+    key array is nulled out before the explode."""
+    norm = normalized_text(text_col)
     sig = minhash_signature(qgrams(norm, q), num_hashes)
     keys = F.array(*minhash_band_keys(
         [F.element_at(sig, s + 1) for s in range(num_hashes)], num_bands
     ))
     return df.withColumn(
-        out_col, F.explode(F.when(norm.isNotNull(), keys))
+        "block_key", F.explode(F.when(norm.isNotNull(), keys))
     )
 
 
@@ -277,11 +277,9 @@ def with_prefix_blocks(
     df: DataFrame,
     text_col: str = "doc",
     prefix_len: int = 8,
-    lowercase: bool = True,
-    out_col: str = "block_key",
 ) -> DataFrame:
     """Simple deterministic prefix block key (SQL-expressible; used for
     DuckDB-verifiable oracle queries and as a cheap sorted-neighborhood
     style key)."""
-    key = F.substring(normalized_text(text_col, lowercase), 1, prefix_len)
-    return df.withColumn(out_col, key)
+    key = F.substring(normalized_text(text_col), 1, prefix_len)
+    return df.withColumn("block_key", key)

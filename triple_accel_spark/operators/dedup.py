@@ -13,11 +13,18 @@ table (``doc_id, text``):
 * ``ngram_jaccard``         — exact n-gram Jaccard for a pair frame.
 * ``embedding_near_duplicates`` — cosine near-dup over a vector column.
 
-All hot paths are built-in Column expressions (JVM, codegen). Every
-near-duplicate route has one shape: a per-document sketch from one
-aggregation, candidate pairs from ``pairs.candidate_pairs`` (keyed by
-LSH bucket; bounded skew via its cap and salt) with each side's sketch
-attached, then one column expression per pair. Exact Jaccard
+All hot paths are built-in Column expressions (JVM, codegen). The
+text sketches (the MinHash signature and gram-hash set, SimHash) are
+one ``groupBy(id)`` each over the rows of
+``blocking.exploded_gram_rows``, which rebalances, normalizes and sets
+the NULL policy for all of them: a document with NULL text or a NULL
+id has no sketch and pairs with nothing, not even another NULL
+document.
+
+Every near-duplicate route has one shape: a per-document sketch from
+one aggregation, candidate pairs from ``pairs.candidate_pairs`` (keyed
+by LSH bucket; bounded skew via its cap and salt) with each side's
+sketch attached, then one column expression per pair. Exact Jaccard
 verification compares the two documents' gram-hash sets with
 ``array_intersect``. A set holds at most ``len - q + 1`` longs, so a
 pair carries data bounded by its documents' lengths, like the text
@@ -41,7 +48,6 @@ from triple_accel_spark.operators.blocking import (
     minhash_band_keys,
     normalized_text,
     qgrams,
-    rebalance_small_scan,
 )
 from triple_accel_spark.operators.pairs import candidate_pairs
 from triple_accel_spark.session import stage
@@ -147,28 +153,15 @@ def minhash_lsh_duplicates(
     ``J = |A∩B| / (|A| + |B| - |A∩B|)``. A set holds at most
     ``len - q + 1`` longs, so what a pair carries is bounded by its
     documents' lengths, as is the text payload edit scoring re-attaches
-    per pair; nothing is multiplied by a document's gram count.
-
-    NULL policy (matches ``blocking.minhash_band_table``): NULL-text
-    rows yield no grams and therefore no candidate pairs — a NULL
-    document cannot be near-anything, including another NULL document."""
+    per pair; nothing is multiplied by a document's gram count."""
     if jaccard_threshold <= 0:
         raise ValueError("jaccard_threshold must be > 0 (pairs with an "
                          "empty gram intersection are pruned, not scored)")
     bands = minhash_band_keys(
         [F.col(f"_h{s}") for s in range(num_hashes)], num_bands
     )
-    # rebalance the RAW projection, normalize after: the regex
-    # normalization otherwise evaluates inside the (possibly one-task)
-    # scan stage, serializing it before the shuffle spreads the rows
-    raw = rebalance_small_scan(
-        df.select(F.col(id_col).alias("rid"), F.col(text_col).alias("_raw"))
-    )
-    base = raw.select("rid", normalized_text("_raw").alias("_t")).where(
-        F.col("_t").isNotNull()
-    )
-    gram_rows = exploded_gram_rows(base, "rid", "_t", q).select(
-        "rid", F.xxhash64("_g", F.lit(-1)).alias("gh")
+    gram_rows = exploded_gram_rows(df, id_col, text_col, q).select(
+        F.col(id_col).alias("rid"), F.xxhash64("_g", F.lit(-1)).alias("gh")
     )
     # one map-side-combinable aggregation per document: the gram-hash
     # set and the signature. The min over the multiset equals the min
@@ -196,22 +189,28 @@ def minhash_lsh_duplicates(
     )
     sets = per_doc.select("rid", "_gs")
     na, nb = F.size("_gs_a"), F.size("_gs_b")
-    inter = F.size(F.array_intersect("_gs_a", "_gs_b"))
     # the containment bound is lossless: J can never exceed min/max, and
     # both are correctly rounded quotients of integers, so no pair the
     # jaccard filter keeps is dropped (the 1e-9 slack is a margin only)
     bound = F.least(na, nb).cast("double") / F.greatest(na, nb).cast("double")
+    # |A∩B| comes out of a one-row generator, which the jaccard filter
+    # cannot be pushed below: as a plain projection it is inlined into
+    # the join condition and the filter, and evaluated three times
+    sizes = F.inline(F.array(F.struct(
+        na.alias("_na"), nb.alias("_nb"),
+        F.size(F.array_intersect("_gs_a", "_gs_b")).alias("_i"),
+    )))
+    union = F.col("_na") + F.col("_nb") - F.col("_i")
     out = (
         pairs.join(sets.toDF("id_a", "_gs_a"), "id_a")
         .join(sets.toDF("id_b", "_gs_b"), "id_b")
         .where(bound >= F.lit(jaccard_threshold) - F.lit(1e-9))
-        .withColumn("_i", inter)
-        .withColumn(
-            "jaccard",
-            F.col("_i").cast("double") / (na + nb - F.col("_i")).cast("double"),
+        .select("id_a", "id_b", sizes)
+        .select(
+            "id_a", "id_b",
+            (F.col("_i").cast("double") / union.cast("double")).alias("jaccard"),
         )
         .where(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
     )
     out._persisted_frames = [per_doc] + getattr(pairs, "_persisted_frames", [])
     return out
@@ -342,10 +341,6 @@ def simhash64(text_col, q: int = 4) -> Column:
     return out
 
 
-# shared home is blocking.gram_hash_expr; re-exported for callers
-_gram_hash_expr = gram_hash_expr
-
-
 def with_simhash(
     df: DataFrame,
     text_col: str = "text",
@@ -366,22 +361,14 @@ def with_simhash(
     re-walk the gram array 64 times interpreted. With the default
     ``gram_hash`` fingerprints are bit-identical to ``simhash64``
     (same grams, hash, and sign rule); ``gram_hash="md5"`` swaps in
-    the DuckDB-matchable 60-bit digest hash (see ``_gram_hash_expr``).
-
-    NULL policy (matches the blocking/dedup operators): NULL-text rows
-    yield no fingerprint row — a NULL document has no content to
-    sketch; left-join the result if NULL-doc ids must be carried.
+    the DuckDB-matchable 60-bit digest hash (see
+    ``blocking.gram_hash_expr``). Left-join the result if the ids of
+    documents without a sketch must be carried.
     """
-    raw = rebalance_small_scan(
-        df.select(F.col(id_col).alias("_sid"), F.col(text_col).alias("_raw"))
+    gram_rows = exploded_gram_rows(df, id_col, text_col, q).select(
+        id_col, gram_hash_expr(F.col("_g"), gram_hash).alias("_h")
     )
-    base = raw.select("_sid", normalized_text("_raw").alias("_t")).where(
-        F.col("_t").isNotNull()
-    )
-    gram_rows = exploded_gram_rows(base, "_sid", "_t", q).select(
-        "_sid", _gram_hash_expr(F.col("_g"), gram_hash).alias("_h")
-    )
-    sums = gram_rows.groupBy("_sid").agg(
+    sums = gram_rows.groupBy(id_col).agg(
         *[
             F.sum(
                 F.when(
@@ -391,9 +378,7 @@ def with_simhash(
             for b in range(64)
         ]
     )
-    return sums.select(
-        F.col("_sid").alias(id_col), _simhash_assemble("_b").alias(out_col)
-    )
+    return sums.select(id_col, _simhash_assemble("_b").alias(out_col))
 
 
 def simhash_near_duplicates(
@@ -431,10 +416,7 @@ def simhash_near_duplicates(
 
     Complements ``minhash_lsh_duplicates``: SimHash verification is one
     popcount per candidate over an 8-byte fingerprint, so the verify
-    stage is pure fixed-width column math.
-
-    NULL policy: inherited from ``with_simhash`` — NULL docs sketch to
-    nothing and pair with nothing."""
+    stage is pure fixed-width column math."""
     if max_hamming >= n_bands:
         raise ValueError(
             "recall guarantee requires max_hamming < n_bands "

@@ -225,21 +225,10 @@ def with_fingerprint(
     for both gram hashes (asserted in tests), but the shuffle carries
     one (id, long) per doc and no higher-order function appears in the
     plan. Prefer this for whole-corpus jobs; the Column form remains
-    for ad-hoc per-row use and composition inside expressions.
-
-    NULL policy: NULL-text rows yield no fingerprint row (a NULL doc
-    has no content to fingerprint); left-join if ids must be carried.
+    for ad-hoc per-row use and composition inside expressions. The gram
+    rows come from ``blocking.exploded_gram_rows`` over the RAW text
+    (no normalization), so documents with NULL text or id get no row.
     """
-    base = rebalance_small_scan(
-        df.select(
-            F.col(id_col).alias("_fid"), F.col(text_col).alias("_t")
-        ).where(F.col("_t").isNotNull())
-    )
-    gram_rows = exploded_gram_rows(base, "_fid", "_t", q, index_alias="_idx")
-    h = gram_hash_expr(F.col("_g"), gram_hash, salt=F.col("_idx"))
-    return (
-        gram_rows.select("_fid", h.alias("_h"))
-        .groupBy("_fid")
-        .agg(F.bit_xor("_h").alias(out_col))
-        .select(F.col("_fid").alias(id_col), out_col)
-    )
+    gram_rows = exploded_gram_rows(df, id_col, text_col, q, normalize=False)
+    h = gram_hash_expr(F.col("_g"), gram_hash, salt=F.col("_i"))
+    return gram_rows.groupBy(id_col).agg(F.bit_xor(h).alias(out_col))

@@ -149,9 +149,7 @@ def resolve_entities(transcripts: DataFrame, cfg: ResolveConfig | None = None) -
         keys = with_prefix_blocks(docs, "doc", prefix_len=cfg.prefix_len)
     else:
         keys = minhash_band_table(
-            # with_minhash_blocks' join back to the records drops NULL ids
-            docs.where(F.col("conv_id").isNotNull()),
-            "conv_id", "doc", q=cfg.q, num_hashes=cfg.num_hashes,
+            docs, "conv_id", "doc", q=cfg.q, num_hashes=cfg.num_hashes,
             num_bands=cfg.num_bands,
         )
     ids = candidate_pairs(
